@@ -271,7 +271,6 @@ class KnnMixed(Workload):
     calls per run gives a gateable end-to-end figure."""
 
     name = "knn_mixed"
-    jobs = ("knn_join",)
 
     def generate(self) -> None:
         sz = self.sizes
@@ -282,7 +281,7 @@ class KnnMixed(Workload):
         _write_parquet(self.queries, self.qpath, self.cpus)
 
     def prepare(self) -> None:
-        self.nq = self.rows = len(self.queries["qid"])
+        self.nq = len(self.queries["qid"])
 
     def warm_up(self) -> None:
         self.iteration()
