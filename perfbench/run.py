@@ -1,6 +1,6 @@
 """Benchmark entry point.  Run from the repository root:
 
-    python3 perfbench/run.py --workload tile_join --seed 1 --seconds 12 --trace 0
+    python3 perfbench/run.py --workload tile_join --seed 1 --seconds 16 --trace 0
     python3 perfbench/run.py            # every workload, one summary table
 
 Each workload runs in a fresh child interpreter (its own JVM and Python
@@ -19,7 +19,6 @@ import json
 import os
 import shutil
 import signal
-import statistics
 import subprocess
 import sys
 import time
@@ -129,8 +128,10 @@ def _report(workload: str, result: dict) -> None:
     """Diagnostics on stderr: iteration times, set-up parts, oracle problems."""
     it = result["iter_s"]
     parts = " ".join(f"{k}={v:.2f}s" for k, v in result["setup_parts_s"].items())
+    times = " ".join(f"{t:.2f}" for t in it)
+    steal = " ".join(f"{t:.2f}" for t in result["iter_steal_s"])
     print(
-        f"{workload}: {len(it)} iterations, median {statistics.median(it):.3f}s; setup {parts}",
+        f"{workload}: {len(it)} iterations [{times}] s, CPU steal [{steal}] s; setup {parts}",
         file=sys.stderr,
     )
     for p in result["problems"]:
@@ -169,7 +170,7 @@ def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
     ap.add_argument("--workload", choices=WORKLOADS)
     ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--seconds", type=float, default=12)
+    ap.add_argument("--seconds", type=float, default=16)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--size", choices=("full", "tiny"), default="full")
     args = ap.parse_args()

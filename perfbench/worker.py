@@ -3,7 +3,7 @@ timed loop, oracle checks and, when traced, the per-layer probes.
 Writes one JSON result file; ``perfbench/run.py`` starts this module and
 owns the process tree.
 
-    python3 -m perfbench.worker --workload tile_join --seed 1 --seconds 12 \\
+    python3 -m perfbench.worker --workload tile_join --seed 1 --seconds 16 \\
         --trace 0 --size full --work-dir .perfbench_work/x --out result.json
 """
 
@@ -29,9 +29,17 @@ def _seconds(fn) -> float:
     return time.perf_counter() - t0
 
 
+def _steal_s() -> float:
+    """CPU time the hypervisor gave to other guests, summed over this
+    machine's CPUs (the "steal" column of /proc/stat)."""
+    with open("/proc/stat") as f:
+        return int(f.readline().split()[8]) / os.sysconf("SC_CLK_TCK")
+
+
 def _timed_loop(wl, spark, seconds: float, phase: str, rss: RssSampler) -> list[tuple]:
     """Iterations over the full inputs until ``seconds`` have passed (at
-    least one): (wall seconds, outputs or None, traceback or None)."""
+    least one): (wall seconds, outputs or None, traceback or None, steal
+    seconds).  Steal is reported as a diagnostic only."""
     sc = spark.sparkContext
     sc.setLocalProperty(PHASE_PROPERTY, phase)
     rss.active = True
@@ -39,12 +47,13 @@ def _timed_loop(wl, spark, seconds: float, phase: str, rss: RssSampler) -> list[
     start = time.perf_counter()
     while time.perf_counter() - start < seconds:
         t = time.perf_counter()
+        st = _steal_s()
         try:
             with wl.tracer.span("iteration"):
                 out, err = wl.iteration(), None
         except Exception:  # counted as failed jobs, run continues
             out, err = None, traceback.format_exc()
-        iters.append((time.perf_counter() - t, out, err))
+        iters.append((time.perf_counter() - t, out, err, _steal_s() - st))
         spark.catalog.clearCache()
     rss.active = False
     sc.setLocalProperty(PHASE_PROPERTY, None)
@@ -81,7 +90,7 @@ def run(args) -> dict:
     wl.expected()
     attempted = failed = 0
     problems: list[str] = []
-    for _, out, err in reference + timed:
+    for _, out, err, _ in reference + timed:
         attempted += len(wl.jobs)
         if out is None:
             failed += len(wl.jobs)
@@ -92,14 +101,15 @@ def run(args) -> dict:
             problems.extend(probs)
         wl.cleanup(out)
 
-    ok = [dt for dt, out, _ in timed if out is not None]
+    ok = [it[0] for it in timed if it[1] is not None]
     result = {
         "workload": args.workload,
         "seed": args.seed,
         "attempted": attempted,
         "failed": failed,
         "problems": problems[:20],
-        "iter_s": [dt for dt, _, _ in timed],
+        "iter_s": [it[0] for it in timed],
+        "iter_steal_s": [it[3] for it in timed],
         "metrics": {
             "setup_s": setup_s,
             "rows_per_s": statistics.median(wl.rows / dt for dt in ok) if ok else 0.0,
@@ -108,11 +118,11 @@ def run(args) -> dict:
         "setup_parts_s": {"session": session_s, "generate": gen_s, "prepare": prepare_s, "warm_up": warm_s},
     }
     if args.trace:
-        last = next((out for _, out, _ in reversed(timed) if out is not None), None)
+        last = next((it[1] for it in reversed(timed) if it[1] is not None), None)
         layer = {name: 0.0 for name in metrics.PER_LAYER}
         layer["sources.session_start_s"] = session_s
-        layer["trace.overhead_frac"] = statistics.median(dt for dt, _, _ in timed) / statistics.median(
-            dt for dt, _, _ in reference
+        layer["trace.overhead_frac"] = statistics.median(it[0] for it in timed) / statistics.median(
+            it[0] for it in reference
         ) - 1.0
         layer.update(wl.span_metrics())
         if last is not None:
