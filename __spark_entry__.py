@@ -598,7 +598,7 @@ def q_polyline_crossings(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "orders", _CHAIN_B_EXPR, _CHAIN_B_BASE,
         "o_orderkey", "o_orderkey",
     )
-    return polyline_crossing_join(spark, ca, cb, robust=False, broadcast_b=False)
+    return polyline_crossing_join(spark, ca, cb, robust=False)
 
 
 def q_polyline_self_crossings(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -26,20 +26,12 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 
-from ..kernels import cellid
-from ..kernels.coverer import CovererOptions, RegionCoverer
+from ..kernels.coverer import RegionCoverer
 from ..kernels.predicates import compute_origin_inside, polygon_contains_points
 from ..kernels.regions import Loop, Polygon
-from .contains_join import (
-    DEFAULT_LEVEL_MOD,
-    DEFAULT_MAX_CELLS,
-    DEFAULT_MAX_LEVEL,
-    DEFAULT_MIN_LEVEL,
-    RegionIndex,
-    point_query_terms,
-)
+from .contains_join import TERM_OPTS, _candidates, covering_index_terms
 
 TERM_SCHEMA = "term_cell long, is_covering boolean, poly_id string"
 
@@ -55,61 +47,28 @@ def polygons_to_df(spark: SparkSession, regions: dict[str, object]) -> DataFrame
     )
 
 
-def polygon_index_terms(
-    polygons: DataFrame,
-    min_level: int = DEFAULT_MIN_LEVEL,
-    max_level: int = DEFAULT_MAX_LEVEL,
-    level_mod: int = DEFAULT_LEVEL_MOD,
-    max_cells: int = DEFAULT_MAX_CELLS,
-) -> DataFrame:
+def polygon_index_terms(polygons: DataFrame) -> DataFrame:
     """(term_cell, is_covering, poly_id): coverings + ancestor terms,
     computed executor-side per Arrow batch."""
 
     def batches(it):
-        opts = CovererOptions(
-            max_cells=max_cells,
-            min_level=min_level,
-            max_level=max_level,
-            level_mod=level_mod,
-        )
-        coverer = RegionCoverer(opts)
-        true_max = opts.true_max_level()
+        coverer = RegionCoverer(TERM_OPTS)
         for pdf in it:
-            cells_out, cov_out, pid_out = [], [], []
+            coverings = []
             for row in pdf.itertuples(index=False):
                 loops = [
                     Loop(np.stack([np.asarray(v, np.float64) for v in lv]))
                     for lv in row.loops
                 ]
                 region = Polygon(loops) if len(loops) > 1 else loops[0]
-                covering = coverer.get_covering(region)
-                # GetIndexTermsForCanonicalCovering (optimize_for_space=False)
-                prev_id = None
-                for v in covering.tolist():
-                    arr = np.array([v], dtype=np.uint64)
-                    lv = int(cellid.level(arr)[0])
-                    b = int(cellid.to_biased(arr)[0])
-                    if lv < true_max:
-                        cells_out.append(b); cov_out.append(True); pid_out.append(row.poly_id)
-                    cells_out.append(b); cov_out.append(False); pid_out.append(row.poly_id)
-                    lvl = lv
-                    while True:
-                        lvl -= level_mod
-                        if lvl < min_level:
-                            break
-                        anc = cellid.parent(arr, lvl)
-                        if prev_id is not None:
-                            pa = np.array([prev_id], dtype=np.uint64)
-                            if int(cellid.level(pa)[0]) > lvl and int(
-                                cellid.parent(pa, lvl)[0]
-                            ) == int(anc[0]):
-                                break
-                        cells_out.append(int(cellid.to_biased(anc)[0]))
-                        cov_out.append(False)
-                        pid_out.append(row.poly_id)
-                    prev_id = v
+                coverings.append(coverer.get_covering(region))
+            owner, cells, is_cov = covering_index_terms(coverings)
             yield pd.DataFrame(
-                {"term_cell": cells_out, "is_covering": cov_out, "poly_id": pid_out}
+                {
+                    "term_cell": cells,
+                    "is_covering": is_cov,
+                    "poly_id": pdf["poly_id"].to_numpy()[owner],
+                }
             )
 
     return polygons.mapInPandas(batches, TERM_SCHEMA)
@@ -122,47 +81,27 @@ def contains_join_big(
     point_id: str = "pid",
     cell: str = "cell",
     xyz: tuple[str, str, str] = ("x", "y", "z"),
-    **index_opts,
 ) -> DataFrame:
     """All (point, polygon) pairs with the polygon containing the point —
     both sides arbitrarily large."""
-    opts = CovererOptions(
-        max_cells=index_opts.get("max_cells", DEFAULT_MAX_CELLS),
-        min_level=index_opts.get("min_level", DEFAULT_MIN_LEVEL),
-        max_level=index_opts.get("max_level", DEFAULT_MAX_LEVEL),
-        level_mod=index_opts.get("level_mod", DEFAULT_LEVEL_MOD),
-    )
-    terms = polygon_index_terms(polygons, **index_opts)
-
-    # a tiny shim index carrying just the level parameters for the
-    # pure-SQL point query-term generator
-    class _Opts:
-        min_level = opts.min_level
-        level_mod = opts.level_mod
-        true_max_level = opts.true_max_level()
-
-    q = point_query_terms(points, _Opts, cell=cell)
-    x, y, z = xyz
-    cand = (
-        q.join(terms, ["term_cell", "is_covering"])
-        .select(point_id, x, y, z, "poly_id")
-        .dropDuplicates([point_id, "poly_id"])
-    )
+    cand = _candidates(points, polygon_index_terms(polygons), point_id, cell, xyz)
 
     # refinement: cogroup candidates with polygon payloads per poly_id;
     # one parity kernel call per (polygon, batch)
-    out_schema = f"{point_id} long, poly_id string"
+    id_type = points.schema[point_id].dataType
+    id_dtype = to_arrow_type(id_type).to_pandas_dtype()
+    out_schema = f"{point_id} {id_type.simpleString()}, poly_id string"
 
     def refine(key, cand_pdf: pd.DataFrame, poly_pdf: pd.DataFrame):
         if len(cand_pdf) == 0 or len(poly_pdf) == 0:
-            return pd.DataFrame({point_id: pd.Series(dtype="int64"),
+            return pd.DataFrame({point_id: pd.Series(dtype=id_dtype),
                                  "poly_id": pd.Series(dtype="object")})
         loops = [
             np.stack([np.asarray(v, np.float64) for v in lv])
             for lv in poly_pdf.iloc[0]["loops"]
         ]
         flags = [compute_origin_inside(v) for v in loops]
-        pts = cand_pdf[[x, y, z]].to_numpy(np.float64)
+        pts = cand_pdf[list(xyz)].to_numpy(np.float64)
         inside = polygon_contains_points(loops, flags, pts)
         keep = cand_pdf.loc[inside, [point_id]].copy()
         keep["poly_id"] = key[0]

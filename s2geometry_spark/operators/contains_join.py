@@ -8,7 +8,8 @@ Plan shape (SURVEY.md §2.4):
             -> query terms per level (PURE SQL parent exprs, codegen)
             -> explode -> equi-join on (term_cell, is_covering)
   regions:  driver-side canonical coverings (RegionCoverer port)
-            -> index terms (covering + ancestors) -> tiny DataFrame
+            -> index terms (covering + ancestors, kernels.termindex)
+            -> tiny DataFrame
             -> broadcast()
   refine:   vectorized polygon_contains_points parity kernel per candidate
             (pandas UDF; polygons shipped in the UDF closure/broadcast)
@@ -28,14 +29,28 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType
 
 from .. import functions as s2f
-from ..kernels import cellid
+from ..kernels import cellid, termindex
 from ..kernels.coverer import CovererOptions, RegionCoverer
 
-# S2RegionTermIndexer defaults (s2region_term_indexer.h)
-DEFAULT_MIN_LEVEL = 4
-DEFAULT_MAX_LEVEL = 16
-DEFAULT_LEVEL_MOD = 1
-DEFAULT_MAX_CELLS = 8
+# S2RegionTermIndexer defaults (s2region_term_indexer.h); every term join
+# on points uses them, so the point query terms are fixed SQL
+TERM_OPTS = CovererOptions(max_cells=8, min_level=4, max_level=16, level_mod=1)
+
+
+def covering_index_terms(
+    coverings: list[np.ndarray],
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(owner, biased term cell, is_covering) index terms under TERM_OPTS;
+    ``owner`` is the position of the covering in ``coverings``."""
+    owner = np.repeat(np.arange(len(coverings)), [len(c) for c in coverings])
+    cells = np.concatenate([np.zeros(0, np.uint64), *coverings])
+    return termindex.index_terms(
+        owner,
+        cells,
+        TERM_OPTS.min_level,
+        TERM_OPTS.true_max_level(),
+        TERM_OPTS.level_mod,
+    )
 
 
 class RegionIndex:
@@ -49,27 +64,13 @@ class RegionIndex:
     def __init__(
         self,
         regions: dict[str, object],
-        min_level: int = DEFAULT_MIN_LEVEL,
-        max_level: int = DEFAULT_MAX_LEVEL,
-        level_mod: int = DEFAULT_LEVEL_MOD,
-        max_cells: int = DEFAULT_MAX_CELLS,
         coverings: dict[str, np.ndarray] | None = None,
     ):
         """``coverings`` may supply a precomputed covering per region
         (must COVER the region, e.g. a cell raster the region was traced
         from); regions without one are covered by the RegionCoverer."""
         self.regions = regions
-        self.min_level = min_level
-        self.max_level = max_level
-        self.level_mod = level_mod
-        opts = CovererOptions(
-            max_cells=max_cells,
-            min_level=min_level,
-            max_level=max_level,
-            level_mod=level_mod,
-        )
-        self.true_max_level = opts.true_max_level()
-        coverer = RegionCoverer(opts)
+        coverer = RegionCoverer(TERM_OPTS)
         pre = coverings or {}
         self.coverings: dict[str, np.ndarray] = {
             rid: (
@@ -79,38 +80,13 @@ class RegionIndex:
             )
             for rid, region in regions.items()
         }
-        self.terms: list[tuple[int, bool, str]] = []  # (biased_cell, is_covering, rid)
-        for rid, covering in self.coverings.items():
-            for cell_b, is_cov in self._index_terms(covering):
-                self.terms.append((cell_b, is_cov, rid))
-
-    def _index_terms(self, covering: np.ndarray):
-        """GetIndexTermsForCanonicalCovering (s2region_term_indexer.cc:164-213),
-        optimize_for_space=False."""
-        out = []
-        prev_id = None
-        for v in covering.tolist():
-            arr = np.array([v], dtype=np.uint64)
-            level = int(cellid.level(arr)[0])
-            if level < self.true_max_level:
-                out.append((int(cellid.to_biased(arr)[0]), True))  # covering term
-            # ancestor term for the cell itself (optimize_for_space=False)
-            out.append((int(cellid.to_biased(arr)[0]), False))
-            lv = level
-            while True:
-                lv -= self.level_mod
-                if lv < self.min_level:
-                    break
-                anc = cellid.parent(arr, lv)
-                if prev_id is not None:
-                    pa = np.array([prev_id], dtype=np.uint64)
-                    if int(cellid.level(pa)[0]) > lv and int(
-                        cellid.parent(pa, lv)[0]
-                    ) == int(anc[0]):
-                        break
-                out.append((int(cellid.to_biased(anc)[0]), False))
-            prev_id = v
-        return out
+        rids = list(self.coverings)
+        owner, cells, is_cov = covering_index_terms(list(self.coverings.values()))
+        # (biased_cell, is_covering, rid)
+        self.terms: list[tuple[int, bool, str]] = [
+            (c, f, rids[o])
+            for o, c, f in zip(owner.tolist(), cells.tolist(), is_cov.tolist())
+        ]
 
     def terms_df(self, spark: SparkSession) -> DataFrame:
         return spark.createDataFrame(
@@ -118,30 +94,47 @@ class RegionIndex:
         )
 
 
-def point_query_terms(df: DataFrame, index: RegionIndex, cell: str = "cell") -> DataFrame:
+def point_query_terms(df: DataFrame, cell: str = "cell") -> DataFrame:
     """GetQueryTerms for points (s2region_term_indexer.cc:215-245) as pure
     SQL: one ancestor term at true_max_level + covering terms for every
     ancestor level.  Stays in whole-stage codegen; output has one row per
     (row, term) after the explode."""
+    true_max = TERM_OPTS.true_max_level()
     terms = [
         F.struct(
-            s2f.parent_expr(cell, index.true_max_level).alias("term_cell"),
+            s2f.parent_expr(cell, true_max).alias("term_cell"),
             F.lit(False).alias("is_covering"),
         )
     ]
-    lv = index.true_max_level
-    while lv >= index.min_level:
+    for lv in range(true_max, TERM_OPTS.min_level - 1, -TERM_OPTS.level_mod):
         terms.append(
             F.struct(
                 s2f.parent_expr(cell, lv).alias("term_cell"),
                 F.lit(True).alias("is_covering"),
             )
         )
-        lv -= index.level_mod
     return df.withColumn("q_term", F.explode(F.array(*terms))).select(
         "*", F.col("q_term.term_cell").alias("term_cell"),
         F.col("q_term.is_covering").alias("is_covering"),
     ).drop("q_term")
+
+
+def _candidates(
+    points: DataFrame,
+    terms: DataFrame,
+    point_id: str,
+    cell: str,
+    xyz: tuple[str, str, str],
+) -> DataFrame:
+    """(point_id, x, y, z, poly_id) for every point whose query terms meet
+    a region's index terms, each pair once — the covering-intersection
+    candidates every term join refines."""
+    return (
+        point_query_terms(points, cell=cell)
+        .join(terms, ["term_cell", "is_covering"], "inner")
+        .select(point_id, *xyz, "poly_id")
+        .dropDuplicates([point_id, "poly_id"])
+    )
 
 
 def _make_refiner(index: RegionIndex):
@@ -191,20 +184,12 @@ def cap_join(
     point_id: str = "pid",
     cell: str = "cell",
     xyz: tuple[str, str, str] = ("x", "y", "z"),
-    **index_opts,
 ) -> DataFrame:
     """within-distance join: all (point, cap) pairs with the point inside
     the spherical cap.  Candidates via the term join; refinement is a pure
     SQL chord^2 test (JVM codegen, no Python) against the cap constants."""
-    index = RegionIndex(caps, **index_opts)
-    index.regions = caps  # caps are the regions; refinement below is SQL
-    terms = F.broadcast(index.terms_df(spark))
-    q = point_query_terms(points, index, cell=cell)
-    cand = (
-        q.join(terms, ["term_cell", "is_covering"], "inner")
-        .select(point_id, *xyz, "poly_id")
-        .dropDuplicates([point_id, "poly_id"])
-    )
+    terms = F.broadcast(RegionIndex(caps).terms_df(spark))
+    cand = _candidates(points, terms, point_id, cell, xyz)
     x, y, z = xyz
     # refinement predicate: one CASE over the (few) caps — constant-folded
     expr = None
@@ -227,7 +212,6 @@ def rect_join(
     point_id: str = "pid",
     cell: str = "cell",
     xyz: tuple[str, str, str] = ("x", "y", "z"),
-    **index_opts,
 ) -> DataFrame:
     """S2LatLngRect::Contains(S2Point) as a distributed join
     (s2latlng_rect.cc:248-262, tested throughout s2latlng_rect_test.cc),
@@ -241,14 +225,8 @@ def rect_join(
     (wider rects belong in a cell-union join)."""
     import math
 
-    index = RegionIndex(rects, **index_opts)
-    terms = F.broadcast(index.terms_df(spark))
-    q = point_query_terms(points, index, cell=cell)
-    cand = (
-        q.join(terms, ["term_cell", "is_covering"], "inner")
-        .select(point_id, *xyz, "poly_id")
-        .dropDuplicates([point_id, "poly_id"])
-    )
+    terms = F.broadcast(RegionIndex(rects).terms_df(spark))
+    cand = _candidates(points, terms, point_id, cell, xyz)
     x, y, z = xyz
     expr = None
     for rid, rect in rects.items():
@@ -351,10 +329,7 @@ def contains_join(
     semantics, no parity refinement) — what S2CellIndex-style queries give.
     """
     terms = F.broadcast(index.terms_df(spark))
-    q = point_query_terms(points, index, cell=cell)
-    cand = q.join(terms, ["term_cell", "is_covering"], "inner").select(
-        point_id, *xyz, "poly_id"
-    ).dropDuplicates([point_id, "poly_id"])
+    cand = _candidates(points, terms, point_id, cell, xyz)
     if not exact:
         return cand
     refine = _make_refiner(index)

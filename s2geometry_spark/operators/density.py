@@ -2,7 +2,8 @@
 
 S2DensityTree (s2density_tree.h:16-40) is a cell -> weight histogram used
 to shard skewed spatial data into equal-weight pieces.  Its distributed
-re-expression is a groupBy-count at coarse cell levels; the measured
+re-expression is a groupBy-count at coarse cell levels (measure_density;
+the multi-level tree is tiling.tile_rollup); the measured
 density then drives TWO mechanisms required by the north rule ("explicit
 salting/repartition-by-cell-prefix"):
 
@@ -33,21 +34,6 @@ def measure_density(df: DataFrame, level: int, cell: str = "cell") -> DataFrame:
     return df.groupBy(s2f.parent_expr(cell, level).alias("cell_lvl")).agg(
         F.count(F.lit(1)).alias("cnt")
     )
-
-
-def density_tree(df: DataFrame, levels, cell: str = "cell") -> DataFrame:
-    """Multi-level density tree from ONE fine aggregation (ancestor
-    property: coarse weights are sums of fine weights)."""
-    levels = sorted(levels)
-    fine = measure_density(df, levels[-1], cell).withColumn("level", F.lit(levels[-1]))
-    out = fine
-    for lvl in reversed(levels[:-1]):
-        out = out.unionByName(
-            fine.groupBy(s2f.parent_expr("cell_lvl", lvl).alias("cell_lvl"))
-            .agg(F.sum("cnt").alias("cnt"))
-            .withColumn("level", F.lit(lvl))
-        )
-    return out.select("level", "cell_lvl", "cnt")
 
 
 def salt_factors(

@@ -12,10 +12,11 @@ Plan:
   covering cell + covering terms for its ancestors; coverings overlap in
   range iff they share a term.  Emitted as FLAT (eid, term_cell,
   is_covering) rows from one mapInPandas pass — no per-row Python.
-  candidates — ONE equi-join of the two term tables on (term_cell,
-  is_covering); the term rows CARRY their edge coordinates, so the join
-  output feeds the crossing kernel in the same stage (no pair-dedup
-  shuffle of the candidate set, no coordinate re-joins).
+  candidates — the two term tables are cogrouped on a coarse cell
+  prefix and matched on (term_cell, is_covering) inside each group; the
+  term rows CARRY their edge coordinates, so the matches feed the
+  crossing kernel in the same task (no pair-dedup shuffle of the
+  candidate set, no coordinate re-joins).
   refine — vectorized interior-crossing kernel per candidate batch
   (predicates.edges_cross_batch: pinned-order triage determinants with
   the antipodal sign-chain check; robust mode drops uncertain rows to
@@ -28,9 +29,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..kernels import cellid, metrics, predicates
+from ..kernels import cellid, metrics, predicates, termindex
 
 MAX_LEVEL = 20
 # ancestor terms are emitted only at every LEVEL_MOD-th level and covering
@@ -104,60 +104,26 @@ def _edge_coverings_flat(
     return owner, cell
 
 
-def _terms_flat(owner: np.ndarray, cell: np.ndarray, side: str):
-    """Vectorized term emission for a flat covering batch.
-
-    index side: (c, True) [if level < MAX_LEVEL], (c, False), ancestors
-    (p, False); query side: (c, False), ancestors (p, True).
-    """
-    lv = cellid.level(cell)
-    out_owner, out_cell, out_cov = [], [], []
-    biased = cellid.to_biased(cell)
-    if side == "index":
-        m = lv < MAX_LEVEL
-        out_owner.append(owner[m]); out_cell.append(biased[m]); out_cov.append(np.ones(m.sum(), bool))
-        out_owner.append(owner); out_cell.append(biased); out_cov.append(np.zeros(len(owner), bool))
-        anc_flag = False
-    else:
-        out_owner.append(owner); out_cell.append(biased); out_cov.append(np.zeros(len(owner), bool))
-        anc_flag = True
-    for L in np.unique(lv):
-        if L == 0:
-            continue
-        sel = np.flatnonzero(lv == L)
-        sub = cell[sel]
-        # ancestors only on the LEVEL_MOD grid (covering cells are snapped
-        # to the same grid, so containment is still detected exactly)
-        for p in range(int(L) - LEVEL_MOD, -1, -LEVEL_MOD):
-            par = cellid.to_biased(cellid.parent(sub, p))
-            out_owner.append(owner[sel])
-            out_cell.append(par)
-            out_cov.append(np.full(len(sel), anc_flag))
-    return (
-        np.concatenate(out_owner),
-        np.concatenate(out_cell),
-        np.concatenate(out_cov),
-    )
-
-
 def _term_table(
     edges: DataFrame,
     id_col: str,
     prefix: str,
     side: str,
-    split_rounds: int = SPLIT_ROUNDS,
-    group_level: int | None = None,
+    split_rounds: int,
+    group_level: int,
 ) -> DataFrame:
-    """Term rows WITH the edge coordinates: widening the term table lets
-    the candidate join feed the crossing kernel directly — no pair dedup
-    shuffle and no coordinate re-joins on the (much larger) candidate
-    set.  Duplicate candidates cost only vectorized flops and are
+    """Term rows WITH the edge coordinates and the coarse cogroup key
+    ``g`` (knn_edges._mixed_group at ``group_level``): widening the term
+    table lets the candidate match feed the crossing kernel directly —
+    no pair dedup shuffle and no coordinate re-joins on the (much
+    larger) candidate set.  Duplicate candidates cost only vectorized flops and are
     deduped AFTER refinement, where the row count is the (tiny) crossing
     set."""
     cols = [f"{prefix}{k}{ax}" for k in (0, 1) for ax in "xyz"]
-    g_schema = ", g long" if group_level is not None else ""
 
     def batches(it):
+        from .knn_edges import _mixed_group  # knn_edges imports this module
+
         for pdf in it:
             if len(pdf) == 0:
                 out = pd.DataFrame(
@@ -166,85 +132,69 @@ def _term_table(
                         "term_cell": pd.Series(dtype="int64"),
                         "is_covering": pd.Series(dtype="bool"),
                         **{c: pd.Series(dtype="float64") for c in cols},
+                        "g": pd.Series(dtype="int64"),
                     }
                 )
-                if group_level is not None:
-                    out["g"] = pd.Series(dtype="int64")
                 yield out
                 continue
             A0 = pdf[cols[:3]].to_numpy(np.float64)
             A1 = pdf[cols[3:]].to_numpy(np.float64)
             owner, cell = _edge_coverings_flat(A0, A1, split_rounds)
-            o, c, f = _terms_flat(owner, cell, side)
+            if side == "index":
+                o, c, f = termindex.index_terms(owner, cell, 0, MAX_LEVEL, LEVEL_MOD)
+            else:
+                o, c, f = termindex.query_terms(owner, cell, 0, LEVEL_MOD)
             ids = pdf[id_col].to_numpy(np.int64)
-            out = pd.DataFrame(
-                {id_col: ids[o], "term_cell": c.astype(np.int64), "is_covering": f}
-            )
-            out = out.drop_duplicates()
-            keep = out.index.to_numpy()
+            out = pd.DataFrame({id_col: ids[o], "term_cell": c, "is_covering": f})
             for i, cc in enumerate(cols):
                 src = A0 if i < 3 else A1
-                out[cc] = src[o[keep], i % 3]
-            if group_level is not None:
-                from .knn_edges import _mixed_group
-
-                out["g"] = _mixed_group(
-                    cellid.from_biased(out["term_cell"].to_numpy(np.int64)),
-                    group_level,
-                )
+                out[cc] = src[o, i % 3]
+            out["g"] = _mixed_group(cellid.from_biased(c), group_level)
             yield out
 
     return edges.select(id_col, *cols).mapInPandas(
         batches,
         f"{id_col} long, term_cell long, is_covering boolean, "
         + ", ".join(f"{c} double" for c in cols)
-        + g_schema,
+        + ", g long",
     )
 
 
-def edge_crossing_join(
-    spark: SparkSession,
-    edges_a: DataFrame,
-    edges_b: DataFrame,
-    robust: bool = True,
-    broadcast_b: bool = False,
-    split_rounds: int = SPLIT_ROUNDS,
-) -> DataFrame:
-    """All (eid_a, eid_b) pairs whose edge interiors cross.
+def _term_key(df: pd.DataFrame) -> np.ndarray:
+    """Composite exact-match key: (cell bits << 1) | is_covering."""
+    return (
+        df["term_cell"].to_numpy(np.int64).view(np.uint64) << np.uint64(1)
+    ) | df["is_covering"].to_numpy(bool).astype(np.uint64)
 
-    edges_a: (eid_a, a0x..a1z); edges_b: (eid_b, b0x..b1z).
 
-    Plan shape: term tables carry their edge coordinates, so the
-    candidate join (broadcast hash join when ``broadcast_b``, shuffle
-    hash join for a big B side) flows STRAIGHT into the fused crossing
-    kernel in the same stage — the only shuffle on the non-broadcast
-    path is the term join itself, and the post-refinement dedup touches
-    only actual crossing pairs (a candidate pair that crosses is still
-    one output row no matter how many terms matched it).
-    """
-    ta = _term_table(edges_a, "eid_a", "a", "query", split_rounds)
-    tb = _term_table(edges_b, "eid_b", "b", "index", split_rounds)
-    if broadcast_b:
-        tb = F.broadcast(tb)
-    cand = ta.join(tb, ["term_cell", "is_covering"])
-
-    def refine(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                yield pd.DataFrame(
-                    {"eid_a": pd.Series(dtype="int64"), "eid_b": pd.Series(dtype="int64")}
-                )
-                continue
-            A0 = pdf[["a0x", "a0y", "a0z"]].to_numpy(np.float64)
-            A1 = pdf[["a1x", "a1y", "a1z"]].to_numpy(np.float64)
-            B0 = pdf[["b0x", "b0y", "b0z"]].to_numpy(np.float64)
-            B1 = pdf[["b1x", "b1y", "b1z"]].to_numpy(np.float64)
-            hit = predicates.edges_cross_batch(A0, A1, B0, B1, robust=robust)
-            out = pdf.loc[hit, ["eid_a", "eid_b"]]
-            yield out.drop_duplicates()
-
-    return cand.mapInPandas(refine, "eid_a long, eid_b long").dropDuplicates(
-        ["eid_a", "eid_b"]
+def _term_matches(adf: pd.DataFrame, bdf: pd.DataFrame):
+    """Every (A row, B row) pair of one cogroup with equal (term_cell,
+    is_covering), as a vectorized searchsorted range join: returns
+    (eid_a, eid_b, a0, a1, b0, b1) gathered per pair, or None when no
+    terms match."""
+    if len(adf) == 0 or len(bdf) == 0:
+        return None
+    kb = _term_key(bdf)
+    order = np.argsort(kb, kind="stable")
+    kb_s = kb[order]
+    ka = _term_key(adf)
+    lo = np.searchsorted(kb_s, ka, "left")
+    hi = np.searchsorted(kb_s, ka, "right")
+    cnt = hi - lo
+    total = int(cnt.sum())
+    if total == 0:
+        return None
+    ii = np.repeat(np.arange(len(ka)), cnt)
+    starts = np.zeros(len(ka), np.int64)
+    np.cumsum(cnt[:-1], out=starts[1:])
+    jj = order[np.arange(total, dtype=np.int64) - starts[ii] + lo[ii]]
+    return (
+        adf["eid_a"].to_numpy(np.int64)[ii],
+        bdf["eid_b"].to_numpy(np.int64)[jj],
+        adf[["a0x", "a0y", "a0z"]].to_numpy(np.float64)[ii],
+        adf[["a1x", "a1y", "a1z"]].to_numpy(np.float64)[ii],
+        bdf[["b0x", "b0y", "b0z"]].to_numpy(np.float64)[jj],
+        bdf[["b1x", "b1y", "b1z"]].to_numpy(np.float64)[jj],
     )
 
 
@@ -258,7 +208,10 @@ def edge_crossing_join_cogrouped(
     pair_shift: int = 0,
     crossing_type: str = "interior",
 ) -> DataFrame:
-    """edge_crossing_join without MATERIALIZING the candidate join.
+    """All (eid_a, eid_b) pairs whose edge interiors cross, without
+    MATERIALIZING the candidate join.
+
+    edges_a: (eid_a, a0x..a1z); edges_b: (eid_b, b0x..b1z).
 
     The two term tables are COGROUPED on a coarse cell prefix
     (knn_edges._mixed_group) instead of equi-joined: each side's term
@@ -295,34 +248,10 @@ def edge_crossing_join_cogrouped(
         )
         if want_all:
             empty["sign"] = pd.Series(dtype="int32")
-        if len(adf) == 0 or len(bdf) == 0:
+        m = _term_matches(adf, bdf)
+        if m is None:
             return empty
-        # composite exact-match key: (cell bits << 1) | is_covering
-        kb = (
-            bdf["term_cell"].to_numpy(np.int64).view(np.uint64) << np.uint64(1)
-        ) | bdf["is_covering"].to_numpy(bool).astype(np.uint64)
-        order = np.argsort(kb, kind="stable")
-        kb_s = kb[order]
-        B0 = bdf[["b0x", "b0y", "b0z"]].to_numpy(np.float64)[order]
-        B1 = bdf[["b1x", "b1y", "b1z"]].to_numpy(np.float64)[order]
-        b_ids = bdf["eid_b"].to_numpy(np.int64)[order]
-        ka = (
-            adf["term_cell"].to_numpy(np.int64).view(np.uint64) << np.uint64(1)
-        ) | adf["is_covering"].to_numpy(bool).astype(np.uint64)
-        lo = np.searchsorted(kb_s, ka, "left")
-        hi = np.searchsorted(kb_s, ka, "right")
-        cnt = hi - lo
-        total = int(cnt.sum())
-        if total == 0:
-            return empty
-        ii = np.repeat(np.arange(len(ka)), cnt)
-        starts = np.zeros(len(ka), np.int64)
-        np.cumsum(cnt[:-1], out=starts[1:])
-        jj = np.arange(total, dtype=np.int64) - starts[ii] + lo[ii]
-        A0 = adf[["a0x", "a0y", "a0z"]].to_numpy(np.float64)
-        A1 = adf[["a1x", "a1y", "a1z"]].to_numpy(np.float64)
-        a_ids = adf["eid_a"].to_numpy(np.int64)
-        A0i, A1i, B0j, B1j = A0[ii], A1[ii], B0[jj], B1[jj]
+        a_ids, b_ids, A0i, A1i, B0j, B1j = m
         cross = predicates.edges_cross_batch(A0i, A1i, B0j, B1j, robust=robust)
         if want_all:
             shared = (
@@ -334,8 +263,8 @@ def edge_crossing_join_cogrouped(
             hit = shared | cross
             out = pd.DataFrame(
                 {
-                    "eid_a": a_ids[ii[hit]] >> pair_shift,
-                    "eid_b": b_ids[jj[hit]] >> pair_shift,
+                    "eid_a": a_ids[hit] >> pair_shift,
+                    "eid_b": b_ids[hit] >> pair_shift,
                     # shared vertex wins: CrossingSign returns 0 on any
                     # exact vertex identity before the interior verdict
                     "sign": np.where(shared[hit], 0, 1).astype(np.int32),
@@ -344,8 +273,8 @@ def edge_crossing_join_cogrouped(
         else:
             out = pd.DataFrame(
                 {
-                    "eid_a": a_ids[ii[cross]] >> pair_shift,
-                    "eid_b": b_ids[jj[cross]] >> pair_shift,
+                    "eid_a": a_ids[cross] >> pair_shift,
+                    "eid_b": b_ids[cross] >> pair_shift,
                 }
             )
         return out.drop_duplicates()
@@ -421,33 +350,10 @@ def edge_intersection_join_cogrouped(
                 "iz": pd.Series(dtype="float64"),
             }
         )
-        if len(adf) == 0 or len(bdf) == 0:
+        m = _term_matches(adf, bdf)
+        if m is None:
             return empty
-        kb = (
-            bdf["term_cell"].to_numpy(np.int64).view(np.uint64) << np.uint64(1)
-        ) | bdf["is_covering"].to_numpy(bool).astype(np.uint64)
-        order = np.argsort(kb, kind="stable")
-        kb_s = kb[order]
-        B0 = bdf[["b0x", "b0y", "b0z"]].to_numpy(np.float64)[order]
-        B1 = bdf[["b1x", "b1y", "b1z"]].to_numpy(np.float64)[order]
-        b_ids = bdf["eid_b"].to_numpy(np.int64)[order]
-        ka = (
-            adf["term_cell"].to_numpy(np.int64).view(np.uint64) << np.uint64(1)
-        ) | adf["is_covering"].to_numpy(bool).astype(np.uint64)
-        lo = np.searchsorted(kb_s, ka, "left")
-        hi = np.searchsorted(kb_s, ka, "right")
-        cnt = hi - lo
-        total = int(cnt.sum())
-        if total == 0:
-            return empty
-        ii = np.repeat(np.arange(len(ka)), cnt)
-        starts = np.zeros(len(ka), np.int64)
-        np.cumsum(cnt[:-1], out=starts[1:])
-        jj = np.arange(total, dtype=np.int64) - starts[ii] + lo[ii]
-        A0 = adf[["a0x", "a0y", "a0z"]].to_numpy(np.float64)
-        A1 = adf[["a1x", "a1y", "a1z"]].to_numpy(np.float64)
-        a_ids = adf["eid_a"].to_numpy(np.int64)
-        A0i, A1i, B0j, B1j = A0[ii], A1[ii], B0[jj], B1[jj]
+        a_ids, b_ids, A0i, A1i, B0j, B1j = m
         cross = predicates.edges_cross_batch(A0i, A1i, B0j, B1j, robust=robust)
         if not cross.any():
             return empty
@@ -456,8 +362,8 @@ def edge_intersection_join_cogrouped(
         )
         return pd.DataFrame(
             {
-                "eid_a": a_ids[ii[cross]],
-                "eid_b": b_ids[jj[cross]],
+                "eid_a": a_ids[cross],
+                "eid_b": b_ids[cross],
                 "ix": ix,
                 "iy": iy,
                 "iz": iz,

@@ -93,6 +93,22 @@ VERIFY_SCHEMA = StructType(
 )
 
 
+def _pixels_ok(fmt: str, src: np.ndarray, decoded: np.ndarray, psnr=None) -> bool:
+    """Decoded pixels match the source: exactly for lossless formats,
+    within PSNR_MIN_DB for lossy ones (``psnr`` if already computed)."""
+    if fmt in imagecodec.LOSSLESS:
+        return bool(np.array_equal(src, decoded))
+    if psnr is None:
+        psnr = imagecodec.psnr_db(src, decoded)
+    return bool(psnr >= imagecodec.PSNR_MIN_DB)
+
+
+def _luma(px: np.ndarray) -> np.ndarray:
+    """Rec. 601 luma of an (h, w, 3) RGB image, float64."""
+    p = px.astype(np.float64)
+    return 0.299 * p[:, :, 0] + 0.587 * p[:, :, 1] + 0.114 * p[:, :, 2]
+
+
 def _verify_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     from ..sources.images import caption_for
 
@@ -105,12 +121,7 @@ def _verify_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             # pure function of (idx, w, h), so any px_scale verifies
             src = imagecodec.gen_pixels(idx, decoded.shape[1], decoded.shape[0])
             psnr = imagecodec.psnr_db(src, decoded)
-            lossless = fmt in imagecodec.LOSSLESS
-            pixels_ok = (
-                bool(np.array_equal(src, decoded))
-                if lossless
-                else bool(psnr >= imagecodec.PSNR_MIN_DB)
-            )
+            pixels_ok = _pixels_ok(fmt, src, decoded, psnr)
             out.append(
                 {
                     "image_id": row.image_id,
@@ -204,8 +215,7 @@ def _luma_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ids, cells, lumas, npx = [], [], [], []
         for row in pdf.itertuples(index=False):
             px, _ = imagecodec.decode(bytes(row.bytes))
-            p = px.astype(np.float64)
-            luma = 0.299 * p[:, :, 0] + 0.587 * p[:, :, 1] + 0.114 * p[:, :, 2]
+            luma = _luma(px)
             ids.append(row.image_id)
             cells.append(row.cell)
             lumas.append(float(luma.mean()))
@@ -253,12 +263,8 @@ def _fused_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             idx = int(row.image_id[3:])
             decoded, fmt = imagecodec.decode(bytes(row.bytes))
             src = imagecodec.gen_pixels(idx, decoded.shape[1], decoded.shape[0])
-            if fmt in imagecodec.LOSSLESS:
-                pok = bool(np.array_equal(src, decoded))
-            else:
-                pok = bool(imagecodec.psnr_db(src, decoded) >= imagecodec.PSNR_MIN_DB)
-            p = decoded.astype(np.float64)
-            luma = 0.299 * p[:, :, 0] + 0.587 * p[:, :, 1] + 0.114 * p[:, :, 2]
+            pok = _pixels_ok(fmt, src, decoded)
+            luma = _luma(decoded)
             cells.append(int(cells_in["cell"].iloc[i]))
             oks.append(pok and row.caption == caption_for(idx))
             lumas.append(float(luma.mean()))
@@ -315,8 +321,7 @@ def resize_images(images: DataFrame, out_w: int, out_h: int) -> DataFrame:
             for row in pdf.itertuples(index=False):
                 px, _ = imagecodec.decode(bytes(row.bytes))
                 t = imagecodec.resize_nearest(px, out_w, out_h)
-                p = t.astype(np.float64)
-                luma = 0.299 * p[:, :, 0] + 0.587 * p[:, :, 1] + 0.114 * p[:, :, 2]
+                luma = _luma(t)
                 ids.append(row.image_id)
                 thumbs.append(t.tobytes())
                 lumas.append(float(luma.mean()))
@@ -351,8 +356,7 @@ def sample_video_frames(videos: DataFrame, every: int) -> DataFrame:
                     imagecodec.video_frame_count(buf), every
                 )
                 for f, px in imagecodec.decode_video_frames(buf, keep):
-                    p = px.astype(np.float64)
-                    luma = 0.299 * p[:, :, 0] + 0.587 * p[:, :, 1] + 0.114 * p[:, :, 2]
+                    luma = _luma(px)
                     vids.append(row.video_id)
                     fidx.append(f)
                     lumas.append(float(luma.mean()))
@@ -401,8 +405,7 @@ def _quality_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ids, npx, means, stds, ents, keeps = [], [], [], [], [], []
         for row in pdf.itertuples(index=False):
             px, _ = imagecodec.decode(bytes(row.bytes))
-            p = px.astype(np.float64)
-            luma = 0.299 * p[:, :, 0] + 0.587 * p[:, :, 1] + 0.114 * p[:, :, 2]
+            luma = _luma(px)
             m = float(luma.mean())
             s = float(luma.std())
             hist = np.bincount(

@@ -60,7 +60,6 @@ def polyline_crossing_join(
     chains_a: DataFrame,
     chains_b: DataFrame,
     robust: bool = True,
-    broadcast_b: bool = True,
 ) -> DataFrame:
     """Distinct (chain_a, chain_b) pairs whose polylines cross
     (transversal interior crossing — S2Polyline::Intersects' generic

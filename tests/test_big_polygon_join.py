@@ -48,7 +48,11 @@ def test_terms_match_driver_index(spark):
     assert got == want
 
 
-def test_big_join_equals_broadcast_join(spark, pts):
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_big_join_equals_broadcast_join(spark, pts, id_type):
+    """Same pairs as the broadcast join; the point id keeps its type
+    through the cogrouped refinement (string ids are image ids)."""
+    pts = pts.withColumn("pid", F.col("pid").cast(id_type))
     big = {
         (r.pid, r.poly_id)
         for r in bpj.contains_join_big(

@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from s2geometry_spark.kernels import predicates
-from s2geometry_spark.operators.edge_join import edge_crossing_join
+from s2geometry_spark.operators.edge_join import edge_crossing_join_cogrouped
 
 
 def random_edges(rng, n, spread=0.3, center=(1.0, 0.0, 0.0)):
@@ -69,31 +69,32 @@ def test_edge_crossing_join_vs_bruteforce(spark):
     db = to_df(spark, "b", list(range(len(B0))), B0, B1)
     got = {
         (r.eid_a, r.eid_b)
-        for r in edge_crossing_join(spark, da, db, broadcast_b=True).collect()
+        for r in edge_crossing_join_cogrouped(spark, da, db).collect()
     }
     want = brute_pairs(A0, A1, B0, B1)
     assert got == want
     assert want
 
 
-def test_edge_crossing_join_shuffle_path_identical(spark):
-    """broadcast_b=False (the big-B shuffle-join path) must produce the
-    exact same pair set as the broadcast path and brute force."""
+def test_edge_crossing_join_group_level_invariant(spark):
+    """The cogroup key level only partitions the term match: coarse and
+    fine groups must produce the same pair set as brute force."""
     rng = np.random.default_rng(29)
     A0, A1 = random_edges(rng, 50, spread=0.2)
     B0, B1 = random_edges(rng, 50, spread=0.15)
     da = to_df(spark, "a", list(range(len(A0))), A0, A1)
     db = to_df(spark, "b", list(range(len(B0))), B0, B1)
-    shuffled = {
-        (r.eid_a, r.eid_b)
-        for r in edge_crossing_join(spark, da, db, broadcast_b=False).collect()
-    }
-    broadcast = {
-        (r.eid_a, r.eid_b)
-        for r in edge_crossing_join(spark, da, db, broadcast_b=True).collect()
-    }
+    coarse, fine = (
+        {
+            (r.eid_a, r.eid_b)
+            for r in edge_crossing_join_cogrouped(
+                spark, da, db, group_level=g
+            ).collect()
+        }
+        for g in (1, 6)
+    )
     want = brute_pairs(A0, A1, B0, B1)
-    assert shuffled == broadcast == want
+    assert coarse == fine == want
     assert want
 
 
@@ -103,7 +104,7 @@ def test_edge_crossing_join_disjoint_regions(spark):
     B0, B1 = random_edges(rng, 20, spread=0.05, center=(-1, 0, 0))
     da = to_df(spark, "a", list(range(20)), A0, A1)
     db = to_df(spark, "b", list(range(20)), B0, B1)
-    assert edge_crossing_join(spark, da, db).count() == 0
+    assert edge_crossing_join_cogrouped(spark, da, db).count() == 0
 
 def test_antipodal_pairs_do_not_cross():
     """Two arcs whose great circles intersect at ANTIPODAL points each
@@ -129,8 +130,6 @@ def test_crossing_type_all_vs_bruteforce(spark):
     shared-vertex pairs report sign 0, interior crossings sign 1, and
     the sign-1 set equals the interior-mode result.  Brute-force oracle
     = scalar CrossingSign >= 0."""
-    from s2geometry_spark.operators.edge_join import edge_crossing_join_cogrouped
-
     rng = np.random.RandomState(17)
     A0, A1 = random_edges(rng, 30)
     # splice in shared-vertex structure: chain-like edges reusing endpoints

@@ -1,4 +1,4 @@
-"""M6 tests: density tree, salted aggregation equivalence, cell-prefix
+"""M6 tests: multi-level tile rollup, salted aggregation equivalence, cell-prefix
 repartitioning, and checkpoint-resume with per-partition lineage."""
 
 import numpy as np
@@ -20,8 +20,8 @@ def images_geo(spark):
     df.unpersist()
 
 
-def test_density_tree_ancestor_property(images_geo):
-    tree = density.density_tree(images_geo, [2, 5]).collect()
+def test_tile_rollup_ancestor_property(images_geo):
+    tree = tiling.tile_rollup(images_geo, [2, 5]).collect()
     by_level = {}
     for r in tree:
         by_level.setdefault(r.level, {})[r.cell_lvl] = r.cnt
