@@ -339,27 +339,27 @@ def _edges_df(spark, sf_dir, table, key, key2, id_col, prefix):
     )
     eps = _EDGE_EPS
 
-    def batches(it):
-        for pdf in it:
-            k1 = pdf["_k1"].to_numpy(np.int64)
-            k2 = pdf["_k2"].to_numpy(np.int64)
-            px, py, pz = xyz_from_triplet(*int_triplet_from_key(k1))
-            qx, qy, qz = xyz_from_triplet(*int_triplet_from_key(k2))
-            ex = px + eps * qx
-            ey = py + eps * qy
-            ez = pz + eps * qz
-            en = np.sqrt((ex * ex + ey * ey) + ez * ez)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    f"{prefix}0x": px, f"{prefix}0y": py, f"{prefix}0z": pz,
-                    f"{prefix}1x": ex / en, f"{prefix}1y": ey / en,
-                    f"{prefix}1z": ez / en,
-                }
-            )
+    def edge_rows(pdf):
+        k1 = pdf["_k1"].to_numpy(np.int64)
+        k2 = pdf["_k2"].to_numpy(np.int64)
+        px, py, pz = xyz_from_triplet(*int_triplet_from_key(k1))
+        qx, qy, qz = xyz_from_triplet(*int_triplet_from_key(k2))
+        ex = px + eps * qx
+        ey = py + eps * qy
+        ez = pz + eps * qz
+        en = np.sqrt((ex * ex + ey * ey) + ez * ez)
+        return pd.DataFrame(
+            {
+                id_col: pdf[id_col],
+                f"{prefix}0x": px, f"{prefix}0y": py, f"{prefix}0z": pz,
+                f"{prefix}1x": ex / en, f"{prefix}1y": ey / en,
+                f"{prefix}1z": ez / en,
+            }
+        )
 
-    return base.mapInPandas(
-        batches,
+    return s2f.map_batches(
+        base,
+        edge_rows,
         f"{id_col} long, {prefix}0x double, {prefix}0y double, {prefix}0z double, "
         f"{prefix}1x double, {prefix}1y double, {prefix}1z double",
     )
@@ -557,29 +557,28 @@ def _chain_points_df(spark, sf_dir, table, chain_expr, base_key, seq_key, seq_co
         F.col(seq_col).alias("seq"),
     )
 
-    def batches(it):
-        for pdf in it:
-            k = pdf["seq"].to_numpy(np.int64)
-            bk = pdf["_bk"].to_numpy(np.int64)
-            px, py, pz = xyz_from_triplet(*int_triplet_from_key(bk))
-            gx, gy, gz = xyz_from_triplet(*int_triplet_from_key(k - (k % 16)))
-            qx, qy, qz = xyz_from_triplet(*int_triplet_from_key(k))
-            ex = px + _CHAIN_EPS * gx + _CHAIN_JITTER * qx
-            ey = py + _CHAIN_EPS * gy + _CHAIN_JITTER * qy
-            ez = pz + _CHAIN_EPS * gz + _CHAIN_JITTER * qz
-            en = np.sqrt((ex * ex + ey * ey) + ez * ez)
-            yield pd.DataFrame(
-                {
-                    "chain_id": pdf["chain_id"],
-                    "seq": pdf["seq"],
-                    "x": ex / en,
-                    "y": ey / en,
-                    "z": ez / en,
-                }
-            )
+    def chain_rows(pdf):
+        k = pdf["seq"].to_numpy(np.int64)
+        bk = pdf["_bk"].to_numpy(np.int64)
+        px, py, pz = xyz_from_triplet(*int_triplet_from_key(bk))
+        gx, gy, gz = xyz_from_triplet(*int_triplet_from_key(k - (k % 16)))
+        qx, qy, qz = xyz_from_triplet(*int_triplet_from_key(k))
+        ex = px + _CHAIN_EPS * gx + _CHAIN_JITTER * qx
+        ey = py + _CHAIN_EPS * gy + _CHAIN_JITTER * qy
+        ez = pz + _CHAIN_EPS * gz + _CHAIN_JITTER * qz
+        en = np.sqrt((ex * ex + ey * ey) + ez * ez)
+        return pd.DataFrame(
+            {
+                "chain_id": pdf["chain_id"],
+                "seq": pdf["seq"],
+                "x": ex / en,
+                "y": ey / en,
+                "z": ez / en,
+            }
+        )
 
-    return base.mapInPandas(
-        batches, "chain_id long, seq long, x double, y double, z double"
+    return s2f.map_batches(
+        base, chain_rows, "chain_id long, seq long, x double, y double, z double"
     )
 
 
@@ -2127,22 +2126,21 @@ def _clip_chains_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_custkey").cast("long").alias("seq"),
     )
 
-    def batches(it):
-        for pdf in it:
-            k = pdf["seq"].to_numpy(np.int64)
-            vx, vy, vz = xyz_from_triplet(*int_triplet_from_key(k))
-            yield pd.DataFrame(
-                {
-                    "chain_id": pdf["chain_id"],
-                    "seq": pdf["seq"],
-                    "x": vx,
-                    "y": vy,
-                    "z": vz,
-                }
-            )
+    def scatter_rows(pdf):
+        k = pdf["seq"].to_numpy(np.int64)
+        vx, vy, vz = xyz_from_triplet(*int_triplet_from_key(k))
+        return pd.DataFrame(
+            {
+                "chain_id": pdf["chain_id"],
+                "seq": pdf["seq"],
+                "x": vx,
+                "y": vy,
+                "z": vz,
+            }
+        )
 
-    scatter = base.mapInPandas(
-        batches, "chain_id long, seq long, x double, y double, z double"
+    scatter = s2f.map_batches(
+        base, scatter_rows, "chain_id long, seq long, x double, y double, z double"
     )
     rider_rows = [
         (cid, s, float(V[s, 0]), float(V[s, 1]), float(V[s, 2]))
@@ -2223,25 +2221,26 @@ def q_raster_vectorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # where raw-point parity vs the encoder's rounding is undefined)
     import pandas as pd
 
-    def centers(it):
-        for pdf in it:
-            cl5 = ci.parent(
-                ci.from_biased(pdf["cell"].to_numpy(np.int64)), RASTER_LEVEL
-            )
-            x, y, z = ci.to_point(cl5)
-            leafs = ci.from_xyz(x, y, z)
-            yield pd.DataFrame(
-                {
-                    "pid": pdf["pid"],
-                    "x": x,
-                    "y": y,
-                    "z": z,
-                    "cell": ci.to_biased(leafs),
-                }
-            )
+    def centers(pdf):
+        cl5 = ci.parent(
+            ci.from_biased(pdf["cell"].to_numpy(np.int64)), RASTER_LEVEL
+        )
+        x, y, z = ci.to_point(cl5)
+        leafs = ci.from_xyz(x, y, z)
+        return pd.DataFrame(
+            {
+                "pid": pdf["pid"],
+                "x": x,
+                "y": y,
+                "z": z,
+                "cell": ci.to_biased(leafs),
+            }
+        )
 
-    probes = pts.select("pid", "cell").mapInPandas(
-        centers, "pid long, x double, y double, z double, cell long"
+    probes = s2f.map_batches(
+        pts.select("pid", "cell"),
+        centers,
+        "pid long, x double, y double, z double, cell long",
     )
     # the raster IS the polygon's exact covering — skip the coverer (the
     # many-loop scattered polygon makes it slow for zero benefit)
@@ -3208,31 +3207,31 @@ def _loop_graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the wide unit-vector expression trees cost seconds of codegen as
     # Spark SQL (BENCH.md §3: giant unrolled column expressions); one
     # Arrow-batched NumPy pass computes the identical values
-    def _coords(batches):
+    def _coords(pdf):
         import pandas as pd
 
         from s2geometry_spark.kernels.geotag import wide_unit_xyz
 
-        for pdf in batches:
-            sx, sy, sz = wide_unit_xyz(pdf["src"].to_numpy())
-            dx, dy, dz = wide_unit_xyz(pdf["dst"].to_numpy())
-            yield pd.DataFrame(
-                {
-                    "eid": pdf["eid"],
-                    "iid": pdf["iid"],
-                    "src": pdf["src"],
-                    "dst": pdf["dst"],
-                    "gid": pdf["gid"],
-                    "sx": sx,
-                    "sy": sy,
-                    "sz": sz,
-                    "dx": dx,
-                    "dy": dy,
-                    "dz": dz,
-                }
-            )
+        sx, sy, sz = wide_unit_xyz(pdf["src"].to_numpy())
+        dx, dy, dz = wide_unit_xyz(pdf["dst"].to_numpy())
+        return pd.DataFrame(
+            {
+                "eid": pdf["eid"],
+                "iid": pdf["iid"],
+                "src": pdf["src"],
+                "dst": pdf["dst"],
+                "gid": pdf["gid"],
+                "sx": sx,
+                "sy": sy,
+                "sz": sz,
+                "dx": dx,
+                "dy": dy,
+                "dz": dz,
+            }
+        )
 
-    return bare.mapInPandas(
+    return s2f.map_batches(
+        bare,
         _coords,
         "eid long, iid long, src long, dst long, gid long, sx double, "
         "sy double, sz double, dx double, dy double, dz double",
@@ -3583,25 +3582,25 @@ def _refpoint_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("e.dst").alias("dst"),
     )
 
-    def _coords(batches):
+    def _coords(pdf):
         import pandas as pd
 
         from s2geometry_spark.kernels.geotag import wide_unit_xyz
 
-        for pdf in batches:
-            sx, sy, sz = wide_unit_xyz(pdf["src"].to_numpy())
-            dx, dy, dz = wide_unit_xyz(pdf["dst"].to_numpy())
-            out = pdf[["gid", "seq", "src", "dst"]].copy()
-            out["sx"], out["sy"], out["sz"] = sx, sy, sz
-            out["dx"], out["dy"], out["dz"] = dx, dy, dz
-            yield out
+        sx, sy, sz = wide_unit_xyz(pdf["src"].to_numpy())
+        dx, dy, dz = wide_unit_xyz(pdf["dst"].to_numpy())
+        out = pdf[["gid", "seq", "src", "dst"]].copy()
+        out["sx"], out["sy"], out["sz"] = sx, sy, sz
+        out["dx"], out["dy"], out["dz"] = dx, dy, dz
+        return out
 
     # the orders scan is 1-2 input splits at any sf (a few MB of
     # parquet): without an explicit repartition the exploded 5x rows and
     # the trig crossing below run on those 1-2 tasks (the AQE/compute
     # fan-out rule from BENCH.md — partition by compute, not bytes)
     arms = arms.repartition(64, "gid")
-    return arms.mapInPandas(
+    return s2f.map_batches(
+        arms,
         _coords,
         "gid long, seq long, src long, dst long, sx double, sy double, "
         "sz double, dx double, dy double, dz double",
@@ -4009,20 +4008,19 @@ def q_img_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     copy of each ("the same photo saved twice"); every planted
     original/variant pair lands within Hamming <= 2 by the qnt error
     bound, plus whatever background near-collisions the procedural
-    corpus contains.  Rows-only check (binary decode is not
-    SQL-expressible); the banded-join mechanism itself is oracle-proven
-    by dedup_simhash, and the pairing guarantees are pytest-verified
-    against brute-force popcount (tests/test_image_dedup.py)."""
+    corpus contains, hashed in ONE fused decode pass (phash_with_reencoded).
+    Rows-only check (binary decode is not SQL-expressible); the banded
+    join is oracle-proven by dedup_simhash, and the pairing guarantees are
+    pytest-verified against brute-force popcount (tests/test_image_dedup.py)."""
     from s2geometry_spark.operators.image_dedup import (
         phash_near_dup_pairs,
-        reencoded_variants,
+        phash_with_reencoded,
     )
     from s2geometry_spark.sources import images as imgsrc
 
     n = imgsrc.n_images_for_sf_dir(sf_dir)
     corpus = imgsrc.images_df(spark, n).select("image_id", "bytes")
-    both = corpus.unionByName(reencoded_variants(corpus, fmt="qnt"))
-    return phash_near_dup_pairs(both, max_dist=2)
+    return phash_near_dup_pairs(hashes_a=phash_with_reencoded(corpus, fmt="qnt"), max_dist=2)
 
 
 def q_img_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4830,20 +4828,20 @@ def _lax_edges_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         dst.cast("long").alias("dst"),
     )
 
-    def attach(it):
+    def attach(pdf):
         from s2geometry_spark.kernels.geotag import (
             int_triplet_from_key,
             xyz_from_triplet,
         )
 
-        for pdf in it:
-            for pre, col in (("s", "src"), ("d", "dst")):
-                vv = pdf[col].to_numpy("int64")
-                x, y, z = xyz_from_triplet(*int_triplet_from_key(vv))
-                pdf[pre + "x"], pdf[pre + "y"], pdf[pre + "z"] = x, y, z
-            yield pdf
+        for pre, col in (("s", "src"), ("d", "dst")):
+            vv = pdf[col].to_numpy("int64")
+            x, y, z = xyz_from_triplet(*int_triplet_from_key(vv))
+            pdf[pre + "x"], pdf[pre + "y"], pdf[pre + "z"] = x, y, z
+        return pdf
 
-    return base.mapInPandas(
+    return s2f.map_batches(
+        base,
         attach,
         "gid long, eid long, src long, dst long, "
         "sx double, sy double, sz double, dx double, dy double, dz double",

@@ -10,21 +10,16 @@ whole-stage-codegen it.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import (
-    ArrayType,
-    BooleanType,
-    DoubleType,
-    IntegerType,
-    LongType,
-    StringType,
-)
+from pyspark.sql.types import IntegerType, LongType, StringType, StructType
 
-from ..kernels import cellid, coords, geotag
+from ..kernels import cellid, geotag
 
 MAX_LEVEL = 30
 
@@ -60,48 +55,34 @@ def cell_token(biased: pd.Series) -> pd.Series:
     return pd.Series(cellid.to_token(ids), dtype="object")
 
 
-@pandas_udf(LongType())
-def cell_from_token(tok: pd.Series) -> pd.Series:
-    return pd.Series(cellid.to_biased(cellid.from_token(tok.tolist())))
-
-
 @pandas_udf(IntegerType())
 def cell_level(biased: pd.Series) -> pd.Series:
     return pd.Series(cellid.level(cellid.from_biased(biased.to_numpy(np.int64))).astype(np.int32))
 
 
-@pandas_udf(ArrayType(DoubleType()))
-def cell_center_xyz(biased: pd.Series) -> pd.Series:
-    x, y, z = cellid.to_point(cellid.from_biased(biased.to_numpy(np.int64)))
-    return pd.Series([list(t) for t in zip(x, y, z)])
+# ---------- the Python boundary for per-batch kernels ----------
 
 
-@pandas_udf(DoubleType())
-def cell_center_lat(biased: pd.Series) -> pd.Series:
-    lat, _ = cellid.to_latlng(cellid.from_biased(biased.to_numpy(np.int64)))
-    return pd.Series(np.degrees(lat))
+def map_batches(
+    df: DataFrame, fn: Callable[[pd.DataFrame], pd.DataFrame], schema: StructType | str
+) -> DataFrame:
+    """Run the per-batch kernel ``fn(pdf) -> pd.DataFrame`` over ``df``'s
+    Arrow batches (``mapInPandas``) — the package's one Python boundary.
 
+    ``fn`` is called only on non-empty batches, and a result with zero
+    rows is dropped instead of yielded, so no kernel types an empty
+    frame by hand: Spark accepts a task that yields nothing, but
+    rejects a zero-row frame missing some of the declared columns.
+    """
 
-@pandas_udf(DoubleType())
-def cell_center_lng(biased: pd.Series) -> pd.Series:
-    _, lng = cellid.to_latlng(cellid.from_biased(biased.to_numpy(np.int64)))
-    return pd.Series(np.degrees(lng))
+    def batches(it):
+        for pdf in it:
+            if len(pdf):
+                out = fn(pdf)
+                if len(out):
+                    yield out
 
-
-@pandas_udf(ArrayType(DoubleType()))
-def latlng_to_xyz_udf(lat_deg: pd.Series, lng_deg: pd.Series) -> pd.Series:
-    d2r = np.pi / 180.0
-    x, y, z = coords.latlng_to_xyz(
-        lat_deg.to_numpy(np.float64) * d2r, lng_deg.to_numpy(np.float64) * d2r
-    )
-    return pd.Series([list(t) for t in zip(x, y, z)])
-
-
-@pandas_udf(BooleanType())
-def cell_contains(ancestor_biased: pd.Series, other_biased: pd.Series) -> pd.Series:
-    a = cellid.from_biased(ancestor_biased.to_numpy(np.int64))
-    b = cellid.from_biased(other_biased.to_numpy(np.int64))
-    return pd.Series(cellid.contains(a, b))
+    return df.mapInPandas(batches, schema)
 
 
 # ---------- pure-SQL bit algebra on biased int64 ids (JVM codegen) ----------

@@ -477,14 +477,6 @@ def polygon_intersection(a, b):
     return overlay(a, b, "intersection")
 
 
-def polygon_union(a, b):
-    return overlay(a, b, "union")
-
-
-def polygon_difference(a, b):
-    return overlay(a, b, "difference")
-
-
 def boolean_operation(
     op: str,
     a: dict,

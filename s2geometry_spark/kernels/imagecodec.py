@@ -303,16 +303,6 @@ def gen_pixels(idx: int, w: int, h: int) -> np.ndarray:
     return np.stack([r, g, b], axis=-1)
 
 
-# ---------- pluggable real-format hook ----------
-
-try:  # pragma: no cover - PIL absent in this sandbox
-    from PIL import Image  # noqa: F401
-
-    HAVE_PIL = True
-except ImportError:
-    HAVE_PIL = False
-
-
 def resize_nearest(pixels: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
     """Nearest-neighbor resize (h, w, 3) -> (out_h, out_w, 3) — real
     implementation (index arithmetic only, no external imaging libs);
@@ -390,20 +380,6 @@ def decode_video_frames(
         s, e = offsets[int(f)]
         out.append((int(f), decode_jpeg(buf[s:e])))
     return out
-
-
-def decode_real(buf: bytes, fmt: str) -> np.ndarray:  # pragma: no cover
-    """Where libjpeg/libpng decode plugs in; stubbed without PIL."""
-    if not HAVE_PIL:
-        raise NotImplementedError(
-            f"real {fmt} decode requires PIL/libjpeg, not present in sandbox; "
-            "use the self-contained raw/rle/qnt codecs"
-        )
-    import io
-
-    from PIL import Image
-
-    return np.asarray(Image.open(io.BytesIO(buf)).convert("RGB"))
 
 
 def _phash_block_bits(pixels: np.ndarray) -> np.ndarray:

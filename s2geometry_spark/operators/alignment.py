@@ -34,6 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import map_batches
 from ..kernels.alignment import approx_alignment, dtw_exact
 
 __all__ = [
@@ -79,26 +80,26 @@ def align_chain_pairs(
         .join(arrs.select(F.col("chain_id").alias("chain_b"), F.col("verts").alias("vb")), "chain_b")
     )
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for a, b, va, vb in zip(
-                pdf["chain_a"], pdf["chain_b"], pdf["va"], pdf["vb"]
-            ):
-                A = _verts_to_np(va)
-                B = _verts_to_np(vb)
-                if mode == "approx":
-                    cost, path = approx_alignment(A, B, radius)
-                else:
-                    cost, path = dtw_exact(A, B)
-                rows.append((a, b, len(A), len(B), cost, len(path)))
-            yield pd.DataFrame(
-                rows,
-                columns=["chain_a", "chain_b", "n_a", "n_b", "alignment_cost", "path_len"],
-            )
+    def align(pdf):
+        rows = []
+        for a, b, va, vb in zip(
+            pdf["chain_a"], pdf["chain_b"], pdf["va"], pdf["vb"]
+        ):
+            A = _verts_to_np(va)
+            B = _verts_to_np(vb)
+            if mode == "approx":
+                cost, path = approx_alignment(A, B, radius)
+            else:
+                cost, path = dtw_exact(A, B)
+            rows.append((a, b, len(A), len(B), cost, len(path)))
+        return pd.DataFrame(
+            rows,
+            columns=["chain_a", "chain_b", "n_a", "n_b", "alignment_cost", "path_len"],
+        )
 
-    return joined.mapInPandas(
-        batches,
+    return map_batches(
+        joined,
+        align,
         "chain_a long, chain_b long, n_a long, n_b long, "
         "alignment_cost double, path_len long",
     )

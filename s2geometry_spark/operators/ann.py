@@ -23,6 +23,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import map_batches
+
 
 DIM = 64  # embeddings table vector width
 
@@ -141,32 +143,31 @@ def cosine_topk_bruteforce(
         ]
     )
 
-    def batches(it):
+    def topk_cands(pdf):
         qid_arr, Q, qn = bq.value
-        for pdf in it:
-            A = _np_mat(pdf["embedding"])
-            an = _fold_norms(A)
-            # cosine = dot / (nq * nv): the qn*an product order matches the
-            # oracle (IEEE multiply is commutative, so nq*nv == nv*nq bitwise)
-            C = _fold_dots(A, Q) / (an[:, None] * qn[None, :])
-            vids = pdf["vec_id"].to_numpy(np.int64)
-            # per-batch per-query top-k candidates (global top-k refined after)
-            out_q, out_v, out_c = [], [], []
-            for j in range(C.shape[1]):
-                col = C[:, j]
-                mask = vids != qid_arr[j]
-                vv, cc = vids[mask], col[mask]
-                if vv.size == 0:
-                    continue
-                take = min(k, vv.size)
-                # smallest-k by (-cosine, vec_id)
-                order = np.lexsort((vv, -cc))[:take]
-                out_q.extend([qid_arr[j]] * take)
-                out_v.extend(vv[order].tolist())
-                out_c.extend(cc[order].tolist())
-            yield pd.DataFrame({"qid": out_q, "vec_id": out_v, "cosine": out_c})
+        A = _np_mat(pdf["embedding"])
+        an = _fold_norms(A)
+        # cosine = dot / (nq * nv): the qn*an product order matches the
+        # oracle (IEEE multiply is commutative, so nq*nv == nv*nq bitwise)
+        C = _fold_dots(A, Q) / (an[:, None] * qn[None, :])
+        vids = pdf["vec_id"].to_numpy(np.int64)
+        # per-batch per-query top-k candidates (global top-k refined after)
+        out_q, out_v, out_c = [], [], []
+        for j in range(C.shape[1]):
+            col = C[:, j]
+            mask = vids != qid_arr[j]
+            vv, cc = vids[mask], col[mask]
+            if vv.size == 0:
+                continue
+            take = min(k, vv.size)
+            # smallest-k by (-cosine, vec_id)
+            order = np.lexsort((vv, -cc))[:take]
+            out_q.extend([qid_arr[j]] * take)
+            out_v.extend(vv[order].tolist())
+            out_c.extend(cc[order].tolist())
+        return pd.DataFrame({"qid": out_q, "vec_id": out_v, "cosine": out_c})
 
-    cand = vectors.select("vec_id", "embedding").mapInPandas(batches, schema)
+    cand = map_batches(vectors.select("vec_id", "embedding"), topk_cands, schema)
     w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
     return (
         cand.withColumn("rank", F.row_number().over(w))
@@ -213,15 +214,8 @@ def embedding_near_dup(
     )
 
     def tile(key, apdf: pd.DataFrame, bpdf: pd.DataFrame):
-        empty = pd.DataFrame(
-            {
-                "vec_a": pd.Series(dtype="int64"),
-                "vec_b": pd.Series(dtype="int64"),
-                "cosine": pd.Series(dtype="float64"),
-            }
-        )
         if len(apdf) == 0 or len(bpdf) == 0:
-            return empty
+            return pd.DataFrame()
         A = _np_mat(apdf["embedding"])
         B = _np_mat(bpdf["embedding_b"])
         aid = apdf["vec_id"].to_numpy(np.int64)
@@ -237,7 +231,7 @@ def embedding_near_dup(
             keep = np.ones_like(C, dtype=bool)
         ii, jj = np.nonzero((C >= tau) & keep)
         if ii.size == 0:
-            return empty
+            return pd.DataFrame()
         lo = np.minimum(aid[ii], bid[jj])
         hi = np.maximum(aid[ii], bid[jj])
         return pd.DataFrame({"vec_a": lo, "vec_b": hi, "cosine": C[ii, jj]})
@@ -508,22 +502,21 @@ def ivf_topk(
         in_fields = df.schema.fields
         schema = StructType(list(in_fields) + [StructField(out, LongType(), False)])
 
-        def batches(it):
-            for pdf in it:
-                A = _np_mat(pdf[emb_col])
-                an = _fold_norms(A)
-                S = _fold_dots(A, C) / (an[:, None] * cn[None, :])
-                k_eff = min(topn, C.shape[0])
-                # top-k centroids by (-cosine, cid)
-                order = np.argsort(cids[None, :].repeat(len(pdf), 0), axis=1, kind="stable")
-                s_byid = np.take_along_axis(S, order, axis=1)
-                o2 = np.argsort(-s_byid, axis=1, kind="stable")[:, :k_eff]
-                sel = np.take_along_axis(order, o2, axis=1)  # (n, k_eff)
-                rep = pdf.loc[pdf.index.repeat(k_eff)].reset_index(drop=True)
-                rep[out] = cids[sel.reshape(-1)]
-                yield rep
+        def route_rows(pdf):
+            A = _np_mat(pdf[emb_col])
+            an = _fold_norms(A)
+            S = _fold_dots(A, C) / (an[:, None] * cn[None, :])
+            k_eff = min(topn, C.shape[0])
+            # top-k centroids by (-cosine, cid)
+            order = np.argsort(cids[None, :].repeat(len(pdf), 0), axis=1, kind="stable")
+            s_byid = np.take_along_axis(S, order, axis=1)
+            o2 = np.argsort(-s_byid, axis=1, kind="stable")[:, :k_eff]
+            sel = np.take_along_axis(order, o2, axis=1)  # (n, k_eff)
+            rep = pdf.loc[pdf.index.repeat(k_eff)].reset_index(drop=True)
+            rep[out] = cids[sel.reshape(-1)]
+            return rep
 
-        return df.mapInPandas(batches, schema)
+        return map_batches(df, route_rows, schema)
 
     v_r = route(vectors, "embedding", "v_cid", 1)
     q_r = route(queries, "q_embedding", "q_cid", nprobe)
@@ -604,32 +597,33 @@ def sq8_topk(
     bq = sc.broadcast((qids, Qq, qn))
     n_cand = k * rerank
 
-    def batches(it):
+    def sq8_cands(pdf):
         qid_arr, Qq, qn = bq.value
-        for pdf in it:
-            A = _np_mat(pdf["embedding"])
-            Qa = sq8_quantize(A)
-            an = _fold_norms(Qa)
-            C = _fold_dots(Qa, Qq) / (an[:, None] * qn[None, :])
-            vids = pdf["vec_id"].to_numpy(np.int64)
-            out_q, out_v, out_c = [], [], []
-            for j in range(C.shape[1]):
-                col = C[:, j]
-                mask = vids != qid_arr[j]
-                vv, cc = vids[mask], col[mask]
-                if vv.size == 0:
-                    continue
-                take = min(n_cand, vv.size)
-                order = np.lexsort((vv, -cc))[:take]
-                out_q.extend([qid_arr[j]] * take)
-                out_v.extend(vv[order].tolist())
-                out_c.extend(cc[order].tolist())
-            yield pd.DataFrame(
-                {"qid": out_q, "vec_id": out_v, "cosine_sq8": out_c}
-            )
+        A = _np_mat(pdf["embedding"])
+        Qa = sq8_quantize(A)
+        an = _fold_norms(Qa)
+        C = _fold_dots(Qa, Qq) / (an[:, None] * qn[None, :])
+        vids = pdf["vec_id"].to_numpy(np.int64)
+        out_q, out_v, out_c = [], [], []
+        for j in range(C.shape[1]):
+            col = C[:, j]
+            mask = vids != qid_arr[j]
+            vv, cc = vids[mask], col[mask]
+            if vv.size == 0:
+                continue
+            take = min(n_cand, vv.size)
+            order = np.lexsort((vv, -cc))[:take]
+            out_q.extend([qid_arr[j]] * take)
+            out_v.extend(vv[order].tolist())
+            out_c.extend(cc[order].tolist())
+        return pd.DataFrame(
+            {"qid": out_q, "vec_id": out_v, "cosine_sq8": out_c}
+        )
 
-    cand = vectors.select("vec_id", "embedding").mapInPandas(
-        batches, "qid long, vec_id long, cosine_sq8 double"
+    cand = map_batches(
+        vectors.select("vec_id", "embedding"),
+        sq8_cands,
+        "qid long, vec_id long, cosine_sq8 double",
     )
     wq = Window.partitionBy("qid").orderBy(
         F.col("cosine_sq8").desc(), F.col("vec_id").asc()

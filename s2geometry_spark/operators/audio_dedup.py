@@ -27,6 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import map_batches
 from ..kernels import audiofp, wavcodec
 
 #: drop hashes appearing in more than this many audios (stop-hashes);
@@ -42,37 +43,19 @@ def audio_fingerprints(audio: DataFrame) -> DataFrame:
     """(audio_id, n_hashes, h): one exploded posting row per landmark
     hash.  Decode + WHT + hashing in a single mapInPandas crossing."""
 
-    def batches(it):
-        for pdf in it:
-            if not len(pdf):
-                yield pd.DataFrame(
-                    {
-                        "audio_id": pd.Series(dtype="object"),
-                        "n_hashes": pd.Series(dtype="int64"),
-                        "h": pd.Series(dtype="int64"),
-                    }
-                )
-                continue
-            ids, counts, hs = [], [], []
-            for r in pdf.itertuples():
-                s, _rate = wavcodec.decode_wav(r.bytes)
-                f = audiofp.fingerprint(s)
-                ids.extend([r.audio_id] * len(f))
-                counts.extend([len(f)] * len(f))
-                hs.append(f)
-            yield pd.DataFrame(
-                {
-                    "audio_id": pd.Series(ids, dtype="object"),
-                    "n_hashes": pd.Series(counts, dtype="int64"),
-                    "h": np.concatenate(hs)
-                    if hs
-                    else np.empty(0, np.int64),
-                }
-            )
+    def fingerprints(pdf):
+        ids, counts, hs = [], [], []
+        for r in pdf.itertuples():
+            s, _rate = wavcodec.decode_wav(r.bytes)
+            f = audiofp.fingerprint(s)
+            ids.extend([r.audio_id] * len(f))
+            counts.extend([len(f)] * len(f))
+            hs.append(f)
+        return pd.DataFrame(
+            {"audio_id": ids, "n_hashes": counts, "h": np.concatenate(hs)}
+        )
 
-    return audio.select("audio_id", "bytes").mapInPandas(
-        batches, _FP_SCHEMA
-    )
+    return map_batches(audio.select("audio_id", "bytes"), fingerprints, _FP_SCHEMA)
 
 
 def audio_near_dup_pairs(

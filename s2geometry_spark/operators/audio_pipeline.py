@@ -19,6 +19,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..functions import map_batches
 from ..kernels import wavcodec
 
 _FEAT_SCHEMA = (
@@ -36,70 +37,53 @@ def audio_features(audio: DataFrame) -> DataFrame:
     duration match) — the multimodal analog of the image PSNR/caption
     invariant, exact because PCM is lossless."""
 
-    def batches(it):
-        for pdf in it:
-            if not len(pdf):
-                yield pd.DataFrame(
-                    {
-                        "audio_id": pd.Series(dtype="object"),
-                        "rate": pd.Series(dtype="int32"),
-                        "channels": pd.Series(dtype="int32"),
-                        "n_samples": pd.Series(dtype="int32"),
-                        "duration_us": pd.Series(dtype="int64"),
-                        "peak": pd.Series(dtype="int64"),
-                        "sum_sq": pd.Series(dtype="int64"),
-                        "zero_crossings": pd.Series(dtype="int64"),
-                        "clip_count": pd.Series(dtype="int64"),
-                        "invariant_ok": pd.Series(dtype="bool"),
-                    }
-                )
-                continue
-            rows = []
-            for r in pdf.itertuples():
-                s, rate = wavcodec.decode_wav(r.bytes)
-                n, ch = s.shape
-                x = s.astype(np.int64)
-                mono = x.sum(axis=1)  # exact channel fold
-                sgn = np.sign(mono)
-                nz = sgn[sgn != 0]
-                zc = int((nz[1:] != nz[:-1]).sum()) if len(nz) > 1 else 0
-                ok = (
-                    rate == r.rate
-                    and ch == r.channels
-                    and n == r.n_samples
-                    and n * 1_000_000 // rate == r.duration_us
-                )
-                rows.append(
-                    (
-                        r.audio_id,
-                        rate,
-                        ch,
-                        n,
-                        n * 1_000_000 // rate,
-                        int(np.abs(x).max()) if n else 0,
-                        int((x * x).sum()),
-                        zc,
-                        int((np.abs(s.astype(np.int64)) >= 32767).sum()),
-                        bool(ok),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "audio_id",
-                    "rate",
-                    "channels",
-                    "n_samples",
-                    "duration_us",
-                    "peak",
-                    "sum_sq",
-                    "zero_crossings",
-                    "clip_count",
-                    "invariant_ok",
-                ],
+    def features(pdf):
+        rows = []
+        for r in pdf.itertuples():
+            s, rate = wavcodec.decode_wav(r.bytes)
+            n, ch = s.shape
+            x = s.astype(np.int64)
+            mono = x.sum(axis=1)  # exact channel fold
+            sgn = np.sign(mono)
+            nz = sgn[sgn != 0]
+            zc = int((nz[1:] != nz[:-1]).sum()) if len(nz) > 1 else 0
+            ok = (
+                rate == r.rate
+                and ch == r.channels
+                and n == r.n_samples
+                and n * 1_000_000 // rate == r.duration_us
             )
+            rows.append(
+                (
+                    r.audio_id,
+                    rate,
+                    ch,
+                    n,
+                    n * 1_000_000 // rate,
+                    int(np.abs(x).max()) if n else 0,
+                    int((x * x).sum()),
+                    zc,
+                    int((np.abs(s.astype(np.int64)) >= 32767).sum()),
+                    bool(ok),
+                )
+            )
+        return pd.DataFrame(
+            rows,
+            columns=[
+                "audio_id",
+                "rate",
+                "channels",
+                "n_samples",
+                "duration_us",
+                "peak",
+                "sum_sq",
+                "zero_crossings",
+                "clip_count",
+                "invariant_ok",
+            ],
+        )
 
-    return audio.mapInPandas(batches, _FEAT_SCHEMA)
+    return map_batches(audio, features, _FEAT_SCHEMA)
 
 
 _FRAME_SCHEMA = (
@@ -114,30 +98,29 @@ def audio_frame_energy(audio: DataFrame, frame_len: int = 512) -> DataFrame:
     sum-of-squares over the channel-summed signal.  One fused decode
     pass; frames explode INSIDE the Arrow batch (map-only at scale)."""
 
-    def batches(it):
-        for pdf in it:
-            out = {
-                "audio_id": [],
-                "frame": [],
-                "start_sample": [],
-                "n": [],
-                "peak": [],
-                "sum_sq": [],
-            }
-            for r in pdf.itertuples():
-                s, _rate = wavcodec.decode_wav(r.bytes)
-                mono = s.astype(np.int64).sum(axis=1)
-                for f in range(0, len(mono), frame_len):
-                    w = mono[f : f + frame_len]
-                    out["audio_id"].append(r.audio_id)
-                    out["frame"].append(f // frame_len)
-                    out["start_sample"].append(f)
-                    out["n"].append(len(w))
-                    out["peak"].append(int(np.abs(w).max()))
-                    out["sum_sq"].append(int((w * w).sum()))
-            yield pd.DataFrame(out)
+    def frames(pdf):
+        out = {
+            "audio_id": [],
+            "frame": [],
+            "start_sample": [],
+            "n": [],
+            "peak": [],
+            "sum_sq": [],
+        }
+        for r in pdf.itertuples():
+            s, _rate = wavcodec.decode_wav(r.bytes)
+            mono = s.astype(np.int64).sum(axis=1)
+            for f in range(0, len(mono), frame_len):
+                w = mono[f : f + frame_len]
+                out["audio_id"].append(r.audio_id)
+                out["frame"].append(f // frame_len)
+                out["start_sample"].append(f)
+                out["n"].append(len(w))
+                out["peak"].append(int(np.abs(w).max()))
+                out["sum_sq"].append(int((w * w).sum()))
+        return pd.DataFrame(out)
 
-    return audio.mapInPandas(batches, _FRAME_SCHEMA)
+    return map_batches(audio, frames, _FRAME_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

@@ -26,8 +26,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.pandas.types import to_arrow_type
 
+from ..functions import map_batches
 from ..kernels.coverer import RegionCoverer
 from ..kernels.predicates import compute_origin_inside, polygon_contains_points
 from ..kernels.regions import Loop, Polygon
@@ -51,27 +51,26 @@ def polygon_index_terms(polygons: DataFrame) -> DataFrame:
     """(term_cell, is_covering, poly_id): coverings + ancestor terms,
     computed executor-side per Arrow batch."""
 
-    def batches(it):
+    def index_terms(pdf):
         coverer = RegionCoverer(TERM_OPTS)
-        for pdf in it:
-            coverings = []
-            for row in pdf.itertuples(index=False):
-                loops = [
-                    Loop(np.stack([np.asarray(v, np.float64) for v in lv]))
-                    for lv in row.loops
-                ]
-                region = Polygon(loops) if len(loops) > 1 else loops[0]
-                coverings.append(coverer.get_covering(region))
-            owner, cells, is_cov = covering_index_terms(coverings)
-            yield pd.DataFrame(
-                {
-                    "term_cell": cells,
-                    "is_covering": is_cov,
-                    "poly_id": pdf["poly_id"].to_numpy()[owner],
-                }
-            )
+        coverings = []
+        for row in pdf.itertuples(index=False):
+            loops = [
+                Loop(np.stack([np.asarray(v, np.float64) for v in lv]))
+                for lv in row.loops
+            ]
+            region = Polygon(loops) if len(loops) > 1 else loops[0]
+            coverings.append(coverer.get_covering(region))
+        owner, cells, is_cov = covering_index_terms(coverings)
+        return pd.DataFrame(
+            {
+                "term_cell": cells,
+                "is_covering": is_cov,
+                "poly_id": pdf["poly_id"].to_numpy()[owner],
+            }
+        )
 
-    return polygons.mapInPandas(batches, TERM_SCHEMA)
+    return map_batches(polygons, index_terms, TERM_SCHEMA)
 
 
 def contains_join_big(
@@ -89,13 +88,11 @@ def contains_join_big(
     # refinement: cogroup candidates with polygon payloads per poly_id;
     # one parity kernel call per (polygon, batch)
     id_type = points.schema[point_id].dataType
-    id_dtype = to_arrow_type(id_type).to_pandas_dtype()
     out_schema = f"{point_id} {id_type.simpleString()}, poly_id string"
 
     def refine(key, cand_pdf: pd.DataFrame, poly_pdf: pd.DataFrame):
         if len(cand_pdf) == 0 or len(poly_pdf) == 0:
-            return pd.DataFrame({point_id: pd.Series(dtype=id_dtype),
-                                 "poly_id": pd.Series(dtype="object")})
+            return pd.DataFrame()
         loops = [
             np.stack([np.asarray(v, np.float64) for v in lv])
             for lv in poly_pdf.iloc[0]["loops"]

@@ -25,6 +25,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..functions import map_batches
 from ..kernels import booleanop
 
 PAIR_SCHEMA = (
@@ -65,26 +66,19 @@ def winding_join(
 
     x, y, z = xyz
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                yield pd.DataFrame(
-                    {
-                        point_id: pd.Series(dtype="int64"),
-                        "winding": pd.Series(dtype="int64"),
-                    }
-                )
-                continue
-            P = pdf[[x, y, z]].to_numpy(np.float64)
-            yield pd.DataFrame(
-                {
-                    point_id: pdf[point_id],
-                    "winding": winding_numbers(loops, ref, ref_winding, P),
-                }
-            )
+    def winding(pdf):
+        P = pdf[[x, y, z]].to_numpy(np.float64)
+        return pd.DataFrame(
+            {
+                point_id: pdf[point_id],
+                "winding": winding_numbers(loops, ref, ref_winding, P),
+            }
+        )
 
-    return points.select(point_id, x, y, z).mapInPandas(
-        batches, f"{point_id} long, winding long"
+    return map_batches(
+        points.select(point_id, x, y, z),
+        winding,
+        f"{point_id} long, winding long",
     )
 
 
@@ -95,28 +89,27 @@ def pairwise_boolean(pairs: DataFrame) -> DataFrame:
     a_loops, b_loops).  Returns (pair_id, op, n_loops, area,
     result_loops)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for row in pdf.itertuples(index=False):
-                res = booleanop.overlay(
-                    _decode(row.a_loops), _decode(row.b_loops), row.op
-                )
-                out.append(
-                    {
-                        "pair_id": row.pair_id,
-                        "op": row.op,
-                        "n_loops": len(res),
-                        "area": booleanop.polygon_area(res),
-                        "result_loops": _encode(res),
-                    }
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["pair_id", "op", "n_loops", "area", "result_loops"],
+    def overlay(pdf):
+        out = []
+        for row in pdf.itertuples(index=False):
+            res = booleanop.overlay(
+                _decode(row.a_loops), _decode(row.b_loops), row.op
             )
+            out.append(
+                {
+                    "pair_id": row.pair_id,
+                    "op": row.op,
+                    "n_loops": len(res),
+                    "area": booleanop.polygon_area(res),
+                    "result_loops": _encode(res),
+                }
+            )
+        return pd.DataFrame(
+            out,
+            columns=["pair_id", "op", "n_loops", "area", "result_loops"],
+        )
 
-    return pairs.mapInPandas(batches, RESULT_SCHEMA)
+    return map_batches(pairs, overlay, RESULT_SCHEMA)
 
 
 def winding_region_cases(
@@ -153,16 +146,7 @@ def winding_region_cases(
     x, y, z = xyz
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                yield pd.DataFrame(
-                    {
-                        "fixture": pd.Series(dtype="object"),
-                        point_id: pd.Series(dtype="int64"),
-                        "inside": pd.Series(dtype="bool"),
-                    }
-                )
-                continue
+        for pdf in it:  # one frame per fixture: stays a generator
             P = pdf[[x, y, z]].to_numpy(np.float64)
             pids = pdf[point_id].to_numpy()
             for fixture, norm, ref01 in built:

@@ -18,6 +18,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import map_batches
 from ..kernels import builder, cellid
 
 
@@ -30,24 +31,16 @@ def snap_points(
     schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in points.schema.fields)
     schema += ", snap_cell long, sx double, sy double, sz double"
 
-    def batches(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                out = pdf.copy()
-                for c, dt in [("snap_cell", "int64"), ("sx", "float64"),
-                              ("sy", "float64"), ("sz", "float64")]:
-                    out[c] = pd.Series(dtype=dt)
-                yield out
-                continue
-            P = pdf[[x, y, z]].to_numpy(np.float64)
-            cells = builder.snap_cells(P, level)
-            S = builder.snap_to_cell_centers(P, level)
-            out = pdf.copy()
-            out["snap_cell"] = cellid.to_biased(cells)
-            out["sx"], out["sy"], out["sz"] = S[:, 0], S[:, 1], S[:, 2]
-            yield out
+    def snap(pdf):
+        P = pdf[[x, y, z]].to_numpy(np.float64)
+        cells = builder.snap_cells(P, level)
+        S = builder.snap_to_cell_centers(P, level)
+        out = pdf.copy()
+        out["snap_cell"] = cellid.to_biased(cells)
+        out["sx"], out["sy"], out["sz"] = S[:, 0], S[:, 1], S[:, 2]
+        return out
 
-    return points.mapInPandas(batches, schema)
+    return map_batches(points, snap, schema)
 
 
 def snap_dedup(
@@ -77,24 +70,16 @@ def snap_latlng_points(
     )
     schema += ", ilat long, ilng long, sx double, sy double, sz double"
 
-    def batches(it):
-        for pdf in it:
-            out = pdf.copy()
-            if len(pdf) == 0:
-                for c, dt in [("ilat", "int64"), ("ilng", "int64"),
-                              ("sx", "float64"), ("sy", "float64"),
-                              ("sz", "float64")]:
-                    out[c] = pd.Series(dtype=dt)
-                yield out
-                continue
-            P = pdf[[x, y, z]].to_numpy(np.float64)
-            ilat, ilng = builder.int_latlng_snap(P, exponent)
-            S = builder.int_latlng_snap_point(ilat, ilng, exponent)
-            out["ilat"], out["ilng"] = ilat, ilng
-            out["sx"], out["sy"], out["sz"] = S[:, 0], S[:, 1], S[:, 2]
-            yield out
+    def snap_latlng(pdf):
+        P = pdf[[x, y, z]].to_numpy(np.float64)
+        ilat, ilng = builder.int_latlng_snap(P, exponent)
+        S = builder.int_latlng_snap_point(ilat, ilng, exponent)
+        out = pdf.copy()
+        out["ilat"], out["ilng"] = ilat, ilng
+        out["sx"], out["sy"], out["sz"] = S[:, 0], S[:, 1], S[:, 2]
+        return out
 
-    return points.mapInPandas(batches, schema)
+    return map_batches(points, snap_latlng, schema)
 
 
 def snap_latlng_dedup(

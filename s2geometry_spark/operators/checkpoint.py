@@ -11,9 +11,12 @@ library); this is the Spark-native design from SURVEY.md §4.3:
   Iceberg runtime jar is not in the sandbox — the commit protocol below
   is exactly an Iceberg MERGE/append per partition);
 * a ``_partitions`` manifest records per-unit lineage: bucket id, row
-  count, wall seconds, rows/sec, attempt, status — appended ATOMICALLY
-  after the unit's data is fully written (write-then-manifest ordering
-  makes the resume idempotent: a crash between the two re-runs the unit);
+  count (from the written Parquet footers), wall seconds, rows/sec,
+  attempt, status — appended and fsynced after the unit's data is fully
+  written (write-then-manifest ordering makes the resume idempotent: a
+  crash between the two re-runs the unit);
+* a manifest line that does not parse (a torn append: killed mid-write,
+  or a full disk) is an uncommitted record, so its unit re-runs;
 * resume = anti-join pending units against the manifest.
 
 Driving a run at two parallelism levels over the same units is also how
@@ -27,6 +30,7 @@ import os
 import time
 from collections.abc import Callable
 
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -47,31 +51,38 @@ class CheckpointedRun:
         return os.path.join(self.out_dir, MANIFEST)
 
     def completed_buckets(self) -> set[int]:
-        done = set()
-        path = self._manifest_path()
-        if os.path.exists(path):
-            with open(path) as f:
-                for line in f:
-                    rec = json.loads(line)
-                    if rec.get("status") == "done":
-                        done.add(rec["bucket"])
-        return done
+        return {r["bucket"] for r in self.lineage() if r.get("status") == "done"}
 
     def pending_buckets(self) -> list[int]:
         done = self.completed_buckets()
         return [b for b in range(self.n_buckets) if b not in done]
 
     def _append_manifest(self, rec: dict) -> None:
-        # single-writer driver append; O_APPEND is atomic for one line
-        with open(self._manifest_path(), "a") as f:
-            f.write(json.dumps(rec) + "\n")
+        # single-writer driver append, durable before the next unit starts;
+        # a torn last line gets its own line so this record stays parseable
+        with open(self._manifest_path(), "a+b") as f:
+            if f.seek(0, os.SEEK_END):
+                f.seek(-1, os.SEEK_END)
+                if f.read(1) != b"\n":
+                    f.write(b"\n")
+            f.write(json.dumps(rec).encode() + b"\n")
+            f.flush()
+            os.fsync(f.fileno())
 
     def lineage(self) -> list[dict]:
+        """Committed manifest records; a line that does not parse is a
+        torn (uncommitted) append and is skipped."""
         path = self._manifest_path()
         if not os.path.exists(path):
             return []
+        recs = []
         with open(path) as f:
-            return [json.loads(line) for line in f]
+            for line in f:
+                try:
+                    recs.append(json.loads(line))
+                except ValueError:
+                    pass
+        return recs
 
     # ---- execution ----
 
@@ -116,7 +127,7 @@ class CheckpointedRun:
                 attempt += 1  # orphaned partial write from a crashed attempt
             df = make_unit(spark, b)
             df.write.mode("overwrite").parquet(out)  # idempotent re-attempt
-            rows = spark.read.parquet(out).count()
+            rows = pads.dataset(out, format="parquet").count_rows()
             wall = time.time() - t0
             rec = {
                 "run_id": self.run_id,

@@ -23,6 +23,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..functions import map_batches
 from ..kernels import cellid, measures
 from ..kernels.regions import Cell
 
@@ -76,37 +77,27 @@ def closest_cells_join(
     label_arr = np.array(labels)
     k_eff = min(k, len(labels))
 
-    def batches(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                yield pd.DataFrame(
-                    {
-                        "qid": pd.Series(dtype="int64"),
-                        "rank": pd.Series(dtype="int64"),
-                        "label": pd.Series(dtype="object"),
-                        "cell": pd.Series(dtype="int64"),
-                        "dist_chord2": pd.Series(dtype="float64"),
-                    }
-                )
-                continue
-            P = pdf[["qx", "qy", "qz"]].to_numpy(np.float64)
-            D = _cell_distances(P, corners)
-            # cells pre-sorted by (label, cell): stable distance argsort
-            # gives the (dist, label, cell) order
-            order = np.argsort(D, axis=1, kind="stable")[:, :k_eff]
-            qids = pdf["qid"].to_numpy(np.int64)
-            yield pd.DataFrame(
-                {
-                    "qid": np.repeat(qids, k_eff),
-                    "rank": np.tile(np.arange(1, k_eff + 1), len(pdf)),
-                    "label": label_arr[order].reshape(-1),
-                    "cell": biased[order].reshape(-1),
-                    "dist_chord2": np.take_along_axis(D, order, axis=1).reshape(-1),
-                }
-            )
+    def nearest(pdf):
+        P = pdf[["qx", "qy", "qz"]].to_numpy(np.float64)
+        D = _cell_distances(P, corners)
+        # cells pre-sorted by (label, cell): stable distance argsort
+        # gives the (dist, label, cell) order
+        order = np.argsort(D, axis=1, kind="stable")[:, :k_eff]
+        qids = pdf["qid"].to_numpy(np.int64)
+        return pd.DataFrame(
+            {
+                "qid": np.repeat(qids, k_eff),
+                "rank": np.tile(np.arange(1, k_eff + 1), len(pdf)),
+                "label": label_arr[order].reshape(-1),
+                "cell": biased[order].reshape(-1),
+                "dist_chord2": np.take_along_axis(D, order, axis=1).reshape(-1),
+            }
+        )
 
-    return points.select("qid", "qx", "qy", "qz").mapInPandas(
-        batches, "qid long, rank long, label string, cell long, dist_chord2 double"
+    return map_batches(
+        points.select("qid", "qx", "qy", "qz"),
+        nearest,
+        "qid long, rank long, label string, cell long, dist_chord2 double",
     )
 
 

@@ -30,6 +30,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions import map_batches
 from ..kernels import cellid, metrics, predicates, termindex
 
 MAX_LEVEL = 20
@@ -121,39 +122,27 @@ def _term_table(
     set."""
     cols = [f"{prefix}{k}{ax}" for k in (0, 1) for ax in "xyz"]
 
-    def batches(it):
+    def terms(pdf):
         from .knn_edges import _mixed_group  # knn_edges imports this module
 
-        for pdf in it:
-            if len(pdf) == 0:
-                out = pd.DataFrame(
-                    {
-                        id_col: pd.Series(dtype="int64"),
-                        "term_cell": pd.Series(dtype="int64"),
-                        "is_covering": pd.Series(dtype="bool"),
-                        **{c: pd.Series(dtype="float64") for c in cols},
-                        "g": pd.Series(dtype="int64"),
-                    }
-                )
-                yield out
-                continue
-            A0 = pdf[cols[:3]].to_numpy(np.float64)
-            A1 = pdf[cols[3:]].to_numpy(np.float64)
-            owner, cell = _edge_coverings_flat(A0, A1, split_rounds)
-            if side == "index":
-                o, c, f = termindex.index_terms(owner, cell, 0, MAX_LEVEL, LEVEL_MOD)
-            else:
-                o, c, f = termindex.query_terms(owner, cell, 0, LEVEL_MOD)
-            ids = pdf[id_col].to_numpy(np.int64)
-            out = pd.DataFrame({id_col: ids[o], "term_cell": c, "is_covering": f})
-            for i, cc in enumerate(cols):
-                src = A0 if i < 3 else A1
-                out[cc] = src[o, i % 3]
-            out["g"] = _mixed_group(cellid.from_biased(c), group_level)
-            yield out
+        A0 = pdf[cols[:3]].to_numpy(np.float64)
+        A1 = pdf[cols[3:]].to_numpy(np.float64)
+        owner, cell = _edge_coverings_flat(A0, A1, split_rounds)
+        if side == "index":
+            o, c, f = termindex.index_terms(owner, cell, 0, MAX_LEVEL, LEVEL_MOD)
+        else:
+            o, c, f = termindex.query_terms(owner, cell, 0, LEVEL_MOD)
+        ids = pdf[id_col].to_numpy(np.int64)
+        out = pd.DataFrame({id_col: ids[o], "term_cell": c, "is_covering": f})
+        for i, cc in enumerate(cols):
+            src = A0 if i < 3 else A1
+            out[cc] = src[o, i % 3]
+        out["g"] = _mixed_group(cellid.from_biased(c), group_level)
+        return out
 
-    return edges.select(id_col, *cols).mapInPandas(
-        batches,
+    return map_batches(
+        edges.select(id_col, *cols),
+        terms,
         f"{id_col} long, term_cell long, is_covering boolean, "
         + ", ".join(f"{c} double" for c in cols)
         + ", g long",
@@ -243,14 +232,9 @@ def edge_crossing_join_cogrouped(
     out_schema = "eid_a long, eid_b long" + (", sign int" if want_all else "")
 
     def group_cross(key, adf: pd.DataFrame, bdf: pd.DataFrame):
-        empty = pd.DataFrame(
-            {"eid_a": pd.Series(dtype="int64"), "eid_b": pd.Series(dtype="int64")}
-        )
-        if want_all:
-            empty["sign"] = pd.Series(dtype="int32")
         m = _term_matches(adf, bdf)
         if m is None:
-            return empty
+            return pd.DataFrame()
         a_ids, b_ids, A0i, A1i, B0j, B1j = m
         cross = predicates.edges_cross_batch(A0i, A1i, B0j, B1j, robust=robust)
         if want_all:
@@ -341,22 +325,13 @@ def edge_intersection_join_cogrouped(
     out_schema = "eid_a long, eid_b long, ix double, iy double, iz double"
 
     def group_points(key, adf: pd.DataFrame, bdf: pd.DataFrame):
-        empty = pd.DataFrame(
-            {
-                "eid_a": pd.Series(dtype="int64"),
-                "eid_b": pd.Series(dtype="int64"),
-                "ix": pd.Series(dtype="float64"),
-                "iy": pd.Series(dtype="float64"),
-                "iz": pd.Series(dtype="float64"),
-            }
-        )
         m = _term_matches(adf, bdf)
         if m is None:
-            return empty
+            return pd.DataFrame()
         a_ids, b_ids, A0i, A1i, B0j, B1j = m
         cross = predicates.edges_cross_batch(A0i, A1i, B0j, B1j, robust=robust)
         if not cross.any():
-            return empty
+            return pd.DataFrame()
         ix, iy, iz = _intersection_points(
             A0i[cross], A1i[cross], B0j[cross], B1j[cross]
         )

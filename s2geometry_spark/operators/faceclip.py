@@ -27,6 +27,7 @@ from s2geometry_spark.kernels.faceclip import (
     NORM2_MIN,
 )
 from s2geometry_spark.kernels.coords import FACE_UVW_FACES
+from s2geometry_spark.functions import map_batches
 from s2geometry_spark.kernels.geotag import sql_xyz_exprs
 
 N_ROUNDS = 6  # matches kernels.faceclip.MAX_SEGMENTS
@@ -63,24 +64,24 @@ def long_edges(
         F.expr(id_expr or key).cast("long").alias(id_col),
     )
 
-    def batches(it):
-        for pdf in it:
-            k1 = pdf["_k1"].to_numpy(np.int64)
-            k2 = pdf["_k2"].to_numpy(np.int64)
-            ax, ay, az = xyz_from_triplet(*int_triplet_from_key(k1))
-            bx, by, bz = xyz_from_triplet(*int_triplet_from_key(k2))
-            nx, ny, nz = robust_cross_prod(ax, ay, az, bx, by, bz)
-            keep = _dot3(nx, ny, nz, nx, ny, nz) > NORM2_MIN
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(np.int64)[keep],
-                    "ax": ax[keep], "ay": ay[keep], "az": az[keep],
-                    "bx": bx[keep], "by": by[keep], "bz": bz[keep],
-                }
-            )
+    def edge_arcs(pdf):
+        k1 = pdf["_k1"].to_numpy(np.int64)
+        k2 = pdf["_k2"].to_numpy(np.int64)
+        ax, ay, az = xyz_from_triplet(*int_triplet_from_key(k1))
+        bx, by, bz = xyz_from_triplet(*int_triplet_from_key(k2))
+        nx, ny, nz = robust_cross_prod(ax, ay, az, bx, by, bz)
+        keep = _dot3(nx, ny, nz, nx, ny, nz) > NORM2_MIN
+        return pd.DataFrame(
+            {
+                id_col: pdf[id_col].to_numpy(np.int64)[keep],
+                "ax": ax[keep], "ay": ay[keep], "az": az[keep],
+                "bx": bx[keep], "by": by[keep], "bz": bz[keep],
+            }
+        )
 
-    return base.mapInPandas(
-        batches,
+    return map_batches(
+        base,
+        edge_arcs,
         f"{id_col} long, ax double, ay double, az double, "
         "bx double, by double, bz double",
     )
@@ -93,40 +94,31 @@ def face_segments(edges: DataFrame, id_col: str = "eid") -> DataFrame:
 
     from s2geometry_spark.kernels.faceclip import get_face_segments
 
-    def batches(it):
+    def face_segs(pdf):
         import numpy as np
 
-        for pdf in it:
-            if not len(pdf):
-                yield pd.DataFrame(
-                    {
-                        c: pd.Series(dtype="int64" if c in ("eid", "seg", "face") else "float64")
-                        for c in ("eid", "seg", "face", "au", "av", "bu", "bv")
-                    }
-                )
-                continue
-            idx, seg, face, au, av, bu, bv = get_face_segments(
-                pdf["ax"].to_numpy(np.float64),
-                pdf["ay"].to_numpy(np.float64),
-                pdf["az"].to_numpy(np.float64),
-                pdf["bx"].to_numpy(np.float64),
-                pdf["by"].to_numpy(np.float64),
-                pdf["bz"].to_numpy(np.float64),
-            )
-            eid = pdf[id_col].to_numpy(np.int64)[idx]
-            yield pd.DataFrame(
-                {
-                    "eid": eid,
-                    "seg": seg,
-                    "face": face,
-                    "au": au,
-                    "av": av,
-                    "bu": bu,
-                    "bv": bv,
-                }
-            )
+        idx, seg, face, au, av, bu, bv = get_face_segments(
+            pdf["ax"].to_numpy(np.float64),
+            pdf["ay"].to_numpy(np.float64),
+            pdf["az"].to_numpy(np.float64),
+            pdf["bx"].to_numpy(np.float64),
+            pdf["by"].to_numpy(np.float64),
+            pdf["bz"].to_numpy(np.float64),
+        )
+        eid = pdf[id_col].to_numpy(np.int64)[idx]
+        return pd.DataFrame(
+            {
+                "eid": eid,
+                "seg": seg,
+                "face": face,
+                "au": au,
+                "av": av,
+                "bu": bu,
+                "bv": bv,
+            }
+        )
 
-    return edges.mapInPandas(batches, FSEG_SCHEMA)
+    return map_batches(edges, face_segs, FSEG_SCHEMA)
 
 
 def clip_to_faces(edges: DataFrame, padding: float, id_col: str = "eid") -> DataFrame:
@@ -138,42 +130,37 @@ def clip_to_faces(edges: DataFrame, padding: float, id_col: str = "eid") -> Data
 
     from s2geometry_spark.kernels.faceclip import clip_to_padded_face
 
-    def batches(it):
+    def clip_faces(pdf):
         import numpy as np
 
-        cols = ("eid", "face", "au", "av", "bu", "bv")
-        for pdf in it:
-            if not len(pdf):
-                yield pd.DataFrame(
-                    {c: pd.Series(dtype="int64" if c in ("eid", "face") else "float64") for c in cols}
-                )
-                continue
-            n = len(pdf)
-            E = np.repeat(np.arange(n), 6)
-            Fc = np.tile(np.arange(6, dtype=np.int64), n)
-            ax = pdf["ax"].to_numpy(np.float64)[E]
-            ay = pdf["ay"].to_numpy(np.float64)[E]
-            az = pdf["az"].to_numpy(np.float64)[E]
-            bx = pdf["bx"].to_numpy(np.float64)[E]
-            by = pdf["by"].to_numpy(np.float64)[E]
-            bz = pdf["bz"].to_numpy(np.float64)[E]
-            hit, au, av, bu, bv = clip_to_padded_face(
-                Fc, ax, ay, az, bx, by, bz, padding
-            )
-            eid = pdf[id_col].to_numpy(np.int64)[E]
-            yield pd.DataFrame(
-                {
-                    "eid": eid[hit],
-                    "face": Fc[hit],
-                    "au": au[hit],
-                    "av": av[hit],
-                    "bu": bu[hit],
-                    "bv": bv[hit],
-                }
-            )
+        n = len(pdf)
+        E = np.repeat(np.arange(n), 6)
+        Fc = np.tile(np.arange(6, dtype=np.int64), n)
+        ax = pdf["ax"].to_numpy(np.float64)[E]
+        ay = pdf["ay"].to_numpy(np.float64)[E]
+        az = pdf["az"].to_numpy(np.float64)[E]
+        bx = pdf["bx"].to_numpy(np.float64)[E]
+        by = pdf["by"].to_numpy(np.float64)[E]
+        bz = pdf["bz"].to_numpy(np.float64)[E]
+        hit, au, av, bu, bv = clip_to_padded_face(
+            Fc, ax, ay, az, bx, by, bz, padding
+        )
+        eid = pdf[id_col].to_numpy(np.int64)[E]
+        return pd.DataFrame(
+            {
+                "eid": eid[hit],
+                "face": Fc[hit],
+                "au": au[hit],
+                "av": av[hit],
+                "bu": bu[hit],
+                "bv": bv[hit],
+            }
+        )
 
-    return edges.mapInPandas(
-        batches, "eid long, face long, au double, av double, bu double, bv double"
+    return map_batches(
+        edges,
+        clip_faces,
+        "eid long, face long, au double, av double, bu double, bv double",
     )
 
 
@@ -663,35 +650,28 @@ def edge_cells(edges: DataFrame, level: int, id_col: str = "eid") -> DataFrame:
 
     from s2geometry_spark.kernels.faceclip import edge_level_cells
 
-    def batches(it):
+    def level_cells(pdf):
         import numpy as np
 
-        cols = ("eid", "face", "ci", "cj")
-        for pdf in it:
-            if not len(pdf):
-                yield pd.DataFrame({c: pd.Series(dtype="int64") for c in cols})
-                continue
-            idx, face, ci, cj = edge_level_cells(
-                pdf["ax"].to_numpy(np.float64),
-                pdf["ay"].to_numpy(np.float64),
-                pdf["az"].to_numpy(np.float64),
-                pdf["bx"].to_numpy(np.float64),
-                pdf["by"].to_numpy(np.float64),
-                pdf["bz"].to_numpy(np.float64),
-                level,
-            )
-            yield pd.DataFrame(
-                {
-                    "eid": pdf[id_col].to_numpy(np.int64)[idx],
-                    "face": face,
-                    "ci": ci,
-                    "cj": cj,
-                }
-            )
+        idx, face, ci, cj = edge_level_cells(
+            pdf["ax"].to_numpy(np.float64),
+            pdf["ay"].to_numpy(np.float64),
+            pdf["az"].to_numpy(np.float64),
+            pdf["bx"].to_numpy(np.float64),
+            pdf["by"].to_numpy(np.float64),
+            pdf["bz"].to_numpy(np.float64),
+            level,
+        )
+        return pd.DataFrame(
+            {
+                "eid": pdf[id_col].to_numpy(np.int64)[idx],
+                "face": face,
+                "ci": ci,
+                "cj": cj,
+            }
+        )
 
-    return edges.mapInPandas(
-        batches, "eid long, face long, ci long, cj long"
-    )
+    return map_batches(edges, level_cells, "eid long, face long, ci long, cj long")
 
 
 def _edge_cells_pick_sql(
@@ -795,41 +775,34 @@ def edge_cell_clips(edges: DataFrame, level: int, id_col: str = "eid") -> DataFr
 
     from s2geometry_spark.kernels.faceclip import edge_level_cell_clips
 
-    def batches(it):
+    def cell_clips(pdf):
         import numpy as np
 
-        icols = ("eid", "face", "ci", "cj")
-        fcols = ("cau", "cav", "cbu", "cbv")
-        for pdf in it:
-            if not len(pdf):
-                empty = {c: pd.Series(dtype="int64") for c in icols}
-                empty.update({c: pd.Series(dtype="float64") for c in fcols})
-                yield pd.DataFrame(empty)
-                continue
-            idx, face, ci, cj, cau, cav, cbu, cbv = edge_level_cell_clips(
-                pdf["ax"].to_numpy(np.float64),
-                pdf["ay"].to_numpy(np.float64),
-                pdf["az"].to_numpy(np.float64),
-                pdf["bx"].to_numpy(np.float64),
-                pdf["by"].to_numpy(np.float64),
-                pdf["bz"].to_numpy(np.float64),
-                level,
-            )
-            yield pd.DataFrame(
-                {
-                    "eid": pdf[id_col].to_numpy(np.int64)[idx],
-                    "face": face,
-                    "ci": ci,
-                    "cj": cj,
-                    "cau": cau,
-                    "cav": cav,
-                    "cbu": cbu,
-                    "cbv": cbv,
-                }
-            )
+        idx, face, ci, cj, cau, cav, cbu, cbv = edge_level_cell_clips(
+            pdf["ax"].to_numpy(np.float64),
+            pdf["ay"].to_numpy(np.float64),
+            pdf["az"].to_numpy(np.float64),
+            pdf["bx"].to_numpy(np.float64),
+            pdf["by"].to_numpy(np.float64),
+            pdf["bz"].to_numpy(np.float64),
+            level,
+        )
+        return pd.DataFrame(
+            {
+                "eid": pdf[id_col].to_numpy(np.int64)[idx],
+                "face": face,
+                "ci": ci,
+                "cj": cj,
+                "cau": cau,
+                "cav": cav,
+                "cbu": cbu,
+                "cbv": cbv,
+            }
+        )
 
-    return edges.mapInPandas(
-        batches,
+    return map_batches(
+        edges,
+        cell_clips,
         "eid long, face long, ci long, cj long, "
         "cau double, cav double, cbu double, cbv double",
     )

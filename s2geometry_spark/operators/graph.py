@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import map_batches
+
 
 def _large_star(edges: DataFrame) -> DataFrame:
     """edges: undirected pair set (any orientation).  Emit
@@ -91,35 +93,32 @@ def _local_contract(e0: DataFrame) -> DataFrame:
     final labeling (component MINIMUM) is invariant to batching."""
     import pandas as pd
 
-    def uf(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            parent: dict = {}
+    def uf(pdf):
+        parent: dict = {}
 
-            def find(x):
-                r = x
-                while parent.get(r, r) != r:
-                    r = parent[r]
-                while parent.get(x, x) != x:
-                    parent[x], x = r, parent[x]
-                return r
+        def find(x):
+            r = x
+            while parent.get(r, r) != r:
+                r = parent[r]
+            while parent.get(x, x) != x:
+                parent[x], x = r, parent[x]
+            return r
 
-            us = pdf["u"].tolist()
-            vs = pdf["v"].tolist()
-            for a, b in zip(us, vs):
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    if rb < ra:
-                        ra, rb = rb, ra
-                    parent[rb] = ra
-            nodes = set(us)
-            nodes.update(vs)
-            yield pd.DataFrame(
-                [(n, find(n)) for n in nodes], columns=["u", "v"]
-            )
+        us = pdf["u"].tolist()
+        vs = pdf["v"].tolist()
+        for a, b in zip(us, vs):
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                if rb < ra:
+                    ra, rb = rb, ra
+                parent[rb] = ra
+        nodes = set(us)
+        nodes.update(vs)
+        return pd.DataFrame(
+            [(n, find(n)) for n in nodes], columns=["u", "v"]
+        )
 
-    return e0.mapInPandas(uf, "u long, v long")
+    return map_batches(e0, uf, "u long, v long")
 
 
 def connected_components(

@@ -31,6 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import map_batches
 from ..kernels.measures import point_edge_chord2, point_edge_chord2_sql
 from .alignment import _verts_to_np, chains_as_arrays
 
@@ -83,30 +84,30 @@ def hausdorff_pairs(
         .repartition(n_slices, "chain_a", "chain_b")
     )
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for a, b, va, vb in zip(
-                pdf["chain_a"], pdf["chain_b"], pdf["va"], pdf["vb"]
-            ):
-                A = _verts_to_np(va)
-                B = _verts_to_np(vb)
-                d_ab, ka = _directed_hausdorff(A, B)
-                d_ba, kb = _directed_hausdorff(B, A)
-                rows.append(
-                    (a, b, len(A), len(B), d_ab, ka, d_ba, kb, max(d_ab, d_ba))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "chain_a", "chain_b", "n_a", "n_b",
-                    "directed_ab", "a_vertex", "directed_ba", "b_vertex",
-                    "undirected",
-                ],
+    def directed(pdf):
+        rows = []
+        for a, b, va, vb in zip(
+            pdf["chain_a"], pdf["chain_b"], pdf["va"], pdf["vb"]
+        ):
+            A = _verts_to_np(va)
+            B = _verts_to_np(vb)
+            d_ab, ka = _directed_hausdorff(A, B)
+            d_ba, kb = _directed_hausdorff(B, A)
+            rows.append(
+                (a, b, len(A), len(B), d_ab, ka, d_ba, kb, max(d_ab, d_ba))
             )
+        return pd.DataFrame(
+            rows,
+            columns=[
+                "chain_a", "chain_b", "n_a", "n_b",
+                "directed_ab", "a_vertex", "directed_ba", "b_vertex",
+                "undirected",
+            ],
+        )
 
-    return joined.mapInPandas(
-        batches,
+    return map_batches(
+        joined,
+        directed,
         "chain_a long, chain_b long, n_a long, n_b long, "
         "directed_ab double, a_vertex long, directed_ba double, "
         "b_vertex long, undirected double",

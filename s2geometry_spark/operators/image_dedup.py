@@ -43,13 +43,13 @@ over all pairs.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import map_batches
 from ..kernels import imagecodec
 
 N_BANDS = 4
@@ -62,24 +62,17 @@ def phash_from_bytes(images: DataFrame, id_col: str = "image_id") -> DataFrame:
     pixels (not the phash metadata column, which hashes the pre-encoding
     source — the difference is exactly what lossy formats perturb)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                yield pd.DataFrame(
-                    {
-                        id_col: pd.Series(dtype="object"),
-                        "phash": pd.Series(dtype="int64"),
-                    }
-                )
-                continue
-            hashes = np.empty(len(pdf), np.int64)
-            for i, buf in enumerate(pdf["bytes"]):
-                px, _ = imagecodec.decode(bytes(buf))
-                hashes[i] = imagecodec.phash64(px)
-            yield pd.DataFrame({id_col: pdf[id_col].to_numpy(), "phash": hashes})
+    def phashes(pdf):
+        hashes = np.empty(len(pdf), np.int64)
+        for i, buf in enumerate(pdf["bytes"]):
+            px, _ = imagecodec.decode(bytes(buf))
+            hashes[i] = imagecodec.phash64(px)
+        return pd.DataFrame({id_col: pdf[id_col].to_numpy(), "phash": hashes})
 
-    return images.select(id_col, "bytes").mapInPandas(
-        batches, f"{id_col} string, phash long"
+    return map_batches(
+        images.select(id_col, "bytes"),
+        phashes,
+        f"{id_col} string, phash long",
     )
 
 
@@ -124,29 +117,22 @@ def phash_with_reencoded(
     phash_near_dup_pairs(hashes_a=...) / phash_dedup_clusters(hashes=...).
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                yield pd.DataFrame(
-                    {
-                        id_col: pd.Series(dtype="object"),
-                        "phash": pd.Series(dtype="int64"),
-                    }
-                )
-                continue
-            ids = []
-            hashes = []
-            for rid, buf in zip(pdf[id_col], pdf["bytes"]):
-                px, _ = imagecodec.decode(bytes(buf))
-                ids.append(rid)
-                hashes.append(imagecodec.phash64(px))
-                vpx, _ = imagecodec.decode(imagecodec.encode(px, fmt))
-                ids.append(id_prefix + rid)
-                hashes.append(imagecodec.phash64(vpx))
-            yield pd.DataFrame({id_col: ids, "phash": np.array(hashes, np.int64)})
+    def phashes_with_variant(pdf):
+        ids = []
+        hashes = []
+        for rid, buf in zip(pdf[id_col], pdf["bytes"]):
+            px, _ = imagecodec.decode(bytes(buf))
+            ids.append(rid)
+            hashes.append(imagecodec.phash64(px))
+            vpx, _ = imagecodec.decode(imagecodec.encode(px, fmt))
+            ids.append(id_prefix + rid)
+            hashes.append(imagecodec.phash64(vpx))
+        return pd.DataFrame({id_col: ids, "phash": np.array(hashes, np.int64)})
 
-    return images.select(id_col, "bytes").mapInPandas(
-        batches, f"{id_col} string, phash long"
+    return map_batches(
+        images.select(id_col, "bytes"),
+        phashes_with_variant,
+        f"{id_col} string, phash long",
     )
 
 
@@ -301,26 +287,19 @@ def reencoded_variants(
     the standard fixture for exercising near-dup detection end-to-end,
     and a realistic stand-in for "the same photo saved twice"."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                yield pd.DataFrame(
-                    {
-                        id_col: pd.Series(dtype="object"),
-                        "bytes": pd.Series(dtype="object"),
-                    }
-                )
-                continue
-            out_ids = []
-            out_bytes = []
-            for rid, buf in zip(pdf[id_col], pdf["bytes"]):
-                px, _ = imagecodec.decode(bytes(buf))
-                out_ids.append(id_prefix + rid)
-                out_bytes.append(imagecodec.encode(px, fmt))
-            yield pd.DataFrame({id_col: out_ids, "bytes": out_bytes})
+    def reencode(pdf):
+        out_ids = []
+        out_bytes = []
+        for rid, buf in zip(pdf[id_col], pdf["bytes"]):
+            px, _ = imagecodec.decode(bytes(buf))
+            out_ids.append(id_prefix + rid)
+            out_bytes.append(imagecodec.encode(px, fmt))
+        return pd.DataFrame({id_col: out_ids, "bytes": out_bytes})
 
-    return images.select(id_col, "bytes").mapInPandas(
-        batches, f"{id_col} string, bytes binary"
+    return map_batches(
+        images.select(id_col, "bytes"),
+        reencode,
+        f"{id_col} string, bytes binary",
     )
 
 
@@ -425,23 +404,22 @@ def dihedral_variants(images: DataFrame, id_col: str = "image_id") -> DataFrame:
     decoded pixels are an exact transform of the source's.  The
     transform index 1..7 derives deterministically from the image id."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out_ids: list[str] = []
-            out_bytes: list[bytes] = []
-            for iid, buf in zip(pdf[id_col], pdf["bytes"]):
-                px, _ = imagecodec.decode(bytes(buf))
-                h, w = px.shape[:2]
-                if h % 8 or w % 8:
-                    continue
-                k = 1 + (int(str(iid)[3:]) % 7)
-                out_ids.append(f"{iid}:d{k}")
-                out_bytes.append(
-                    imagecodec.encode_png(imagecodec.dihedral_transform(px, k))
-                )
-            yield pd.DataFrame({id_col: out_ids, "bytes": out_bytes})
+    def dihedral(pdf):
+        out_ids: list[str] = []
+        out_bytes: list[bytes] = []
+        for iid, buf in zip(pdf[id_col], pdf["bytes"]):
+            px, _ = imagecodec.decode(bytes(buf))
+            h, w = px.shape[:2]
+            if h % 8 or w % 8:
+                continue
+            k = 1 + (int(str(iid)[3:]) % 7)
+            out_ids.append(f"{iid}:d{k}")
+            out_bytes.append(
+                imagecodec.encode_png(imagecodec.dihedral_transform(px, k))
+            )
+        return pd.DataFrame({id_col: out_ids, "bytes": out_bytes})
 
-    return images.mapInPandas(batches, f"{id_col} string, bytes binary")
+    return map_batches(images, dihedral, f"{id_col} string, bytes binary")
 
 
 def phash_canon_from_bytes(
@@ -450,23 +428,14 @@ def phash_canon_from_bytes(
     """(id_col, canon): the dihedral-invariant perceptual hash of each
     decoded payload — one stateless mapInPandas decode pass."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if not len(pdf):
-                yield pd.DataFrame(
-                    {
-                        id_col: pd.Series(dtype="object"),
-                        "canon": pd.Series(dtype="int64"),
-                    }
-                )
-                continue
-            hashes = np.empty(len(pdf), np.int64)
-            for i, buf in enumerate(pdf["bytes"]):
-                px, _ = imagecodec.decode(bytes(buf))
-                hashes[i] = imagecodec.phash64_canon(px)
-            yield pd.DataFrame({id_col: pdf[id_col].to_numpy(), "canon": hashes})
+    def canon_hashes(pdf):
+        hashes = np.empty(len(pdf), np.int64)
+        for i, buf in enumerate(pdf["bytes"]):
+            px, _ = imagecodec.decode(bytes(buf))
+            hashes[i] = imagecodec.phash64_canon(px)
+        return pd.DataFrame({id_col: pdf[id_col].to_numpy(), "canon": hashes})
 
-    return images.mapInPandas(batches, f"{id_col} string, canon long")
+    return map_batches(images, canon_hashes, f"{id_col} string, canon long")
 
 
 def phash_canon_with_dihedral(
@@ -483,35 +452,28 @@ def phash_canon_with_dihedral(
     the codec end to end; ids/transform-index match dihedral_variants
     exactly, so the downstream pair set is identical."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if not len(pdf):
-                yield pd.DataFrame(
-                    {
-                        id_col: pd.Series(dtype="object"),
-                        "canon": pd.Series(dtype="int64"),
-                    }
-                )
+    def canon_with_variant(pdf):
+        ids: list[str] = []
+        hashes: list[int] = []
+        for iid, buf in zip(pdf[id_col], pdf["bytes"]):
+            px, _ = imagecodec.decode(bytes(buf))
+            ids.append(iid)
+            hashes.append(imagecodec.phash64_canon(px))
+            h, w = px.shape[:2]
+            if h % 8 or w % 8:
                 continue
-            ids: list[str] = []
-            hashes: list[int] = []
-            for iid, buf in zip(pdf[id_col], pdf["bytes"]):
-                px, _ = imagecodec.decode(bytes(buf))
-                ids.append(iid)
-                hashes.append(imagecodec.phash64_canon(px))
-                h, w = px.shape[:2]
-                if h % 8 or w % 8:
-                    continue
-                k = 1 + (int(str(iid)[3:]) % 7)
-                vpx, _ = imagecodec.decode(
-                    imagecodec.encode_png(imagecodec.dihedral_transform(px, k))
-                )
-                ids.append(f"{iid}:d{k}")
-                hashes.append(imagecodec.phash64_canon(vpx))
-            yield pd.DataFrame({id_col: ids, "canon": np.array(hashes, np.int64)})
+            k = 1 + (int(str(iid)[3:]) % 7)
+            vpx, _ = imagecodec.decode(
+                imagecodec.encode_png(imagecodec.dihedral_transform(px, k))
+            )
+            ids.append(f"{iid}:d{k}")
+            hashes.append(imagecodec.phash64_canon(vpx))
+        return pd.DataFrame({id_col: ids, "canon": np.array(hashes, np.int64)})
 
-    return images.select(id_col, "bytes").mapInPandas(
-        batches, f"{id_col} string, canon long"
+    return map_batches(
+        images.select(id_col, "bytes"),
+        canon_with_variant,
+        f"{id_col} string, canon long",
     )
 
 

@@ -15,8 +15,6 @@ batch — the only sane shape for variable-size binary payloads).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -34,6 +32,7 @@ from pyspark.sql.types import (
 )
 
 from .. import functions as s2f
+from ..functions import map_batches
 from ..kernels import cellid, imagecodec
 from ..kernels.geotag import geotag_from_index
 from .contains_join import RegionIndex, contains_join
@@ -109,35 +108,34 @@ def _luma(px: np.ndarray) -> np.ndarray:
     return 0.299 * p[:, :, 0] + 0.587 * p[:, :, 1] + 0.114 * p[:, :, 2]
 
 
-def _verify_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _verify_frame(pdf: pd.DataFrame) -> pd.DataFrame:
     from ..sources.images import caption_for
 
-    for pdf in batches:
-        out = []
-        for row in pdf.itertuples(index=False):
-            idx = int(row.image_id[3:])
-            decoded, fmt = imagecodec.decode(bytes(row.bytes))
-            # regenerate the source at the DECODED dimensions: pixels are a
-            # pure function of (idx, w, h), so any px_scale verifies
-            src = imagecodec.gen_pixels(idx, decoded.shape[1], decoded.shape[0])
-            psnr = imagecodec.psnr_db(src, decoded)
-            pixels_ok = _pixels_ok(fmt, src, decoded, psnr)
-            out.append(
-                {
-                    "image_id": row.image_id,
-                    "fmt": fmt,
-                    "psnr_db": 999.0 if np.isinf(psnr) else float(psnr),
-                    "caption_ok": row.caption == caption_for(idx),
-                    "pixels_ok": pixels_ok,
-                }
-            )
-        yield pd.DataFrame(out, columns=VERIFY_SCHEMA.fieldNames())
+    out = []
+    for row in pdf.itertuples(index=False):
+        idx = int(row.image_id[3:])
+        decoded, fmt = imagecodec.decode(bytes(row.bytes))
+        # regenerate the source at the DECODED dimensions: pixels are a
+        # pure function of (idx, w, h), so any px_scale verifies
+        src = imagecodec.gen_pixels(idx, decoded.shape[1], decoded.shape[0])
+        psnr = imagecodec.psnr_db(src, decoded)
+        pixels_ok = _pixels_ok(fmt, src, decoded, psnr)
+        out.append(
+            {
+                "image_id": row.image_id,
+                "fmt": fmt,
+                "psnr_db": 999.0 if np.isinf(psnr) else float(psnr),
+                "caption_ok": row.caption == caption_for(idx),
+                "pixels_ok": pixels_ok,
+            }
+        )
+    return pd.DataFrame(out, columns=VERIFY_SCHEMA.fieldNames())
 
 
 def verify_invariants(images: DataFrame) -> DataFrame:
     """Per-row invariant table (decode + PSNR + caption equality)."""
     cols = images.select("image_id", "bytes", "caption")
-    return cols.mapInPandas(_verify_batches, VERIFY_SCHEMA)
+    return map_batches(cols, _verify_frame, VERIFY_SCHEMA)
 
 
 def invariant_violations(images: DataFrame) -> DataFrame:
@@ -158,31 +156,30 @@ VIDEO_VERIFY_SCHEMA = StructType(
 )
 
 
-def _video_verify_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _video_verify_frame(pdf: pd.DataFrame) -> pd.DataFrame:
     from ..sources.images import gen_video_frames
 
-    for pdf in batches:
-        out = []
-        for row in pdf.itertuples(index=False):
-            idx = int(row.video_id[3:])
-            decoded = imagecodec.decode_video(bytes(row.bytes))
-            src = gen_video_frames(idx, int(row.w), int(row.h), int(row.n_frames))
-            meta_ok = decoded.shape == src.shape
-            psnr = (
-                min(imagecodec.psnr_db(s, d) for s, d in zip(src, decoded))
-                if meta_ok
-                else 0.0
-            )
-            out.append(
-                {
-                    "video_id": row.video_id,
-                    "fmt": "mjpg",
-                    "psnr_db": 999.0 if np.isinf(psnr) else float(psnr),
-                    "meta_ok": bool(meta_ok),
-                    "pixels_ok": bool(meta_ok and psnr >= imagecodec.PSNR_MIN_DB),
-                }
-            )
-        yield pd.DataFrame(out, columns=VIDEO_VERIFY_SCHEMA.fieldNames())
+    out = []
+    for row in pdf.itertuples(index=False):
+        idx = int(row.video_id[3:])
+        decoded = imagecodec.decode_video(bytes(row.bytes))
+        src = gen_video_frames(idx, int(row.w), int(row.h), int(row.n_frames))
+        meta_ok = decoded.shape == src.shape
+        psnr = (
+            min(imagecodec.psnr_db(s, d) for s, d in zip(src, decoded))
+            if meta_ok
+            else 0.0
+        )
+        out.append(
+            {
+                "video_id": row.video_id,
+                "fmt": "mjpg",
+                "psnr_db": 999.0 if np.isinf(psnr) else float(psnr),
+                "meta_ok": bool(meta_ok),
+                "pixels_ok": bool(meta_ok and psnr >= imagecodec.PSNR_MIN_DB),
+            }
+        )
+    return pd.DataFrame(out, columns=VIDEO_VERIFY_SCHEMA.fieldNames())
 
 
 def verify_video_invariants(videos: DataFrame) -> DataFrame:
@@ -190,7 +187,7 @@ def verify_video_invariants(videos: DataFrame) -> DataFrame:
     metadata geometry and every frame reconstructs its source at
     PSNR >= 40 dB (worst frame reported)."""
     cols = videos.select("video_id", "bytes", "w", "h", "n_frames")
-    return cols.mapInPandas(_video_verify_batches, VIDEO_VERIFY_SCHEMA)
+    return map_batches(cols, _video_verify_frame, VIDEO_VERIFY_SCHEMA)
 
 
 def video_invariant_violations(videos: DataFrame) -> DataFrame:
@@ -210,25 +207,26 @@ LUMA_SCHEMA = StructType(
 )
 
 
-def _luma_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        ids, cells, lumas, npx = [], [], [], []
-        for row in pdf.itertuples(index=False):
-            px, _ = imagecodec.decode(bytes(row.bytes))
-            luma = _luma(px)
-            ids.append(row.image_id)
-            cells.append(row.cell)
-            lumas.append(float(luma.mean()))
-            npx.append(px.shape[0] * px.shape[1])
-        yield pd.DataFrame(
-            {"image_id": ids, "cell": cells, "mean_luma": lumas, "n_px": npx}
-        )
+def _luma_frame(pdf: pd.DataFrame) -> pd.DataFrame:
+    ids, cells, lumas, npx = [], [], [], []
+    for row in pdf.itertuples(index=False):
+        px, _ = imagecodec.decode(bytes(row.bytes))
+        luma = _luma(px)
+        ids.append(row.image_id)
+        cells.append(row.cell)
+        lumas.append(float(luma.mean()))
+        npx.append(px.shape[0] * px.shape[1])
+    return pd.DataFrame(
+        {"image_id": ids, "cell": cells, "mean_luma": lumas, "n_px": npx}
+    )
 
 
 def decoded_features(images_geo: DataFrame) -> DataFrame:
     """Decode every image and extract luma features (Arrow-batched)."""
-    return images_geo.select("image_id", "cell", "bytes").mapInPandas(
-        _luma_batches, LUMA_SCHEMA
+    return map_batches(
+        images_geo.select("image_id", "cell", "bytes"),
+        _luma_frame,
+        LUMA_SCHEMA,
     )
 
 
@@ -253,25 +251,24 @@ FUSED_SCHEMA = StructType(
 )
 
 
-def _fused_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _fused_frame(pdf: pd.DataFrame) -> pd.DataFrame:
     from ..sources.images import caption_for
 
-    for pdf in batches:
-        cells_in = _geotag_frame(pdf["phash"])
-        cells, oks, lumas, npx = [], [], [], []
-        for i, row in enumerate(pdf.itertuples(index=False)):
-            idx = int(row.image_id[3:])
-            decoded, fmt = imagecodec.decode(bytes(row.bytes))
-            src = imagecodec.gen_pixels(idx, decoded.shape[1], decoded.shape[0])
-            pok = _pixels_ok(fmt, src, decoded)
-            luma = _luma(decoded)
-            cells.append(int(cells_in["cell"].iloc[i]))
-            oks.append(pok and row.caption == caption_for(idx))
-            lumas.append(float(luma.mean()))
-            npx.append(decoded.shape[0] * decoded.shape[1])
-        yield pd.DataFrame(
-            {"cell": cells, "ok": oks, "mean_luma": lumas, "n_px": npx}
-        )
+    cells_in = _geotag_frame(pdf["phash"])
+    cells, oks, lumas, npx = [], [], [], []
+    for i, row in enumerate(pdf.itertuples(index=False)):
+        idx = int(row.image_id[3:])
+        decoded, fmt = imagecodec.decode(bytes(row.bytes))
+        src = imagecodec.gen_pixels(idx, decoded.shape[1], decoded.shape[0])
+        pok = _pixels_ok(fmt, src, decoded)
+        luma = _luma(decoded)
+        cells.append(int(cells_in["cell"].iloc[i]))
+        oks.append(pok and row.caption == caption_for(idx))
+        lumas.append(float(luma.mean()))
+        npx.append(decoded.shape[0] * decoded.shape[1])
+    return pd.DataFrame(
+        {"cell": cells, "ok": oks, "mean_luma": lumas, "n_px": npx}
+    )
 
 
 def fused_tile_audit(images: DataFrame, level: int) -> DataFrame:
@@ -285,8 +282,10 @@ def fused_tile_audit(images: DataFrame, level: int) -> DataFrame:
     what the scaling benchmark measures.  Returns per-tile
     (n_images, n_violations, total_px, avg_luma).
     """
-    feats = images.select("image_id", "bytes", "caption", "phash").mapInPandas(
-        _fused_batches, FUSED_SCHEMA
+    feats = map_batches(
+        images.select("image_id", "bytes", "caption", "phash"),
+        _fused_frame,
+        FUSED_SCHEMA,
     )
     return feats.groupBy(s2f.parent_expr("cell", level).alias(f"cell_l{level}")).agg(
         F.count(F.lit(1)).alias("n_images"),
@@ -315,27 +314,26 @@ def resize_images(images: DataFrame, out_w: int, out_h: int) -> DataFrame:
     decode/transform plumbing; swap kernels.imagecodec.decode for a real
     codec without touching the dataflow)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, thumbs, lumas = [], [], []
-            for row in pdf.itertuples(index=False):
-                px, _ = imagecodec.decode(bytes(row.bytes))
-                t = imagecodec.resize_nearest(px, out_w, out_h)
-                luma = _luma(t)
-                ids.append(row.image_id)
-                thumbs.append(t.tobytes())
-                lumas.append(float(luma.mean()))
-            yield pd.DataFrame(
-                {
-                    "image_id": ids,
-                    "thumb": thumbs,
-                    "tw": np.full(len(ids), out_w, dtype=np.int64),
-                    "th": np.full(len(ids), out_h, dtype=np.int64),
-                    "mean_luma": lumas,
-                }
-            )
+    def resize(pdf):
+        ids, thumbs, lumas = [], [], []
+        for row in pdf.itertuples(index=False):
+            px, _ = imagecodec.decode(bytes(row.bytes))
+            t = imagecodec.resize_nearest(px, out_w, out_h)
+            luma = _luma(t)
+            ids.append(row.image_id)
+            thumbs.append(t.tobytes())
+            lumas.append(float(luma.mean()))
+        return pd.DataFrame(
+            {
+                "image_id": ids,
+                "thumb": thumbs,
+                "tw": np.full(len(ids), out_w, dtype=np.int64),
+                "th": np.full(len(ids), out_h, dtype=np.int64),
+                "mean_luma": lumas,
+            }
+        )
 
-    return images.select("image_id", "bytes").mapInPandas(batches, THUMB_SCHEMA)
+    return map_batches(images.select("image_id", "bytes"), resize, THUMB_SCHEMA)
 
 
 def sample_video_frames(videos: DataFrame, every: int) -> DataFrame:
@@ -347,25 +345,26 @@ def sample_video_frames(videos: DataFrame, every: int) -> DataFrame:
     work per video, the shape that survives 100 TB of video.  Frame count
     comes from the container itself, not row metadata."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            vids, fidx, lumas = [], [], []
-            for row in pdf.itertuples(index=False):
-                buf = bytes(row.bytes)
-                keep = imagecodec.frame_sample_indices(
-                    imagecodec.video_frame_count(buf), every
-                )
-                for f, px in imagecodec.decode_video_frames(buf, keep):
-                    luma = _luma(px)
-                    vids.append(row.video_id)
-                    fidx.append(f)
-                    lumas.append(float(luma.mean()))
-            yield pd.DataFrame(
-                {"video_id": vids, "frame_idx": fidx, "mean_luma": lumas}
+    def sampled_frames(pdf):
+        vids, fidx, lumas = [], [], []
+        for row in pdf.itertuples(index=False):
+            buf = bytes(row.bytes)
+            keep = imagecodec.frame_sample_indices(
+                imagecodec.video_frame_count(buf), every
             )
+            for f, px in imagecodec.decode_video_frames(buf, keep):
+                luma = _luma(px)
+                vids.append(row.video_id)
+                fidx.append(f)
+                lumas.append(float(luma.mean()))
+        return pd.DataFrame(
+            {"video_id": vids, "frame_idx": fidx, "mean_luma": lumas}
+        )
 
-    return videos.select("video_id", "bytes").mapInPandas(
-        batches, "video_id string, frame_idx long, mean_luma double"
+    return map_batches(
+        videos.select("video_id", "bytes"),
+        sampled_frames,
+        "video_id string, frame_idx long, mean_luma double",
     )
 
 
@@ -400,40 +399,39 @@ QUALITY_MIN_STD = 8.0
 QUALITY_MIN_ENTROPY = 2.0
 
 
-def _quality_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        ids, npx, means, stds, ents, keeps = [], [], [], [], [], []
-        for row in pdf.itertuples(index=False):
-            px, _ = imagecodec.decode(bytes(row.bytes))
-            luma = _luma(px)
-            m = float(luma.mean())
-            s = float(luma.std())
-            hist = np.bincount(
-                np.clip(luma.astype(np.int64), 0, 255).ravel(), minlength=256
-            )
-            q = hist[hist > 0] / luma.size
-            ent = float(-(q * np.log2(q)).sum())
-            keep = (
-                QUALITY_MIN_MEAN <= m <= QUALITY_MAX_MEAN
-                and s >= QUALITY_MIN_STD
-                and ent >= QUALITY_MIN_ENTROPY
-            )
-            ids.append(row.image_id)
-            npx.append(luma.size)
-            means.append(m)
-            stds.append(s)
-            ents.append(ent)
-            keeps.append(keep)
-        yield pd.DataFrame(
-            {
-                "image_id": ids,
-                "n_px": npx,
-                "mean_luma": means,
-                "std_luma": stds,
-                "entropy_bits": ents,
-                "keep": keeps,
-            }
+def _quality_frame(pdf: pd.DataFrame) -> pd.DataFrame:
+    ids, npx, means, stds, ents, keeps = [], [], [], [], [], []
+    for row in pdf.itertuples(index=False):
+        px, _ = imagecodec.decode(bytes(row.bytes))
+        luma = _luma(px)
+        m = float(luma.mean())
+        s = float(luma.std())
+        hist = np.bincount(
+            np.clip(luma.astype(np.int64), 0, 255).ravel(), minlength=256
         )
+        q = hist[hist > 0] / luma.size
+        ent = float(-(q * np.log2(q)).sum())
+        keep = (
+            QUALITY_MIN_MEAN <= m <= QUALITY_MAX_MEAN
+            and s >= QUALITY_MIN_STD
+            and ent >= QUALITY_MIN_ENTROPY
+        )
+        ids.append(row.image_id)
+        npx.append(luma.size)
+        means.append(m)
+        stds.append(s)
+        ents.append(ent)
+        keeps.append(keep)
+    return pd.DataFrame(
+        {
+            "image_id": ids,
+            "n_px": npx,
+            "mean_luma": means,
+            "std_luma": stds,
+            "entropy_bits": ents,
+            "keep": keeps,
+        }
+    )
 
 
 def image_quality(images: DataFrame) -> DataFrame:
@@ -448,8 +446,10 @@ def image_quality(images: DataFrame) -> DataFrame:
     narrow verdict table.  Rows-only check (binary decode is not
     SQL-expressible).
     """
-    return images.select("image_id", "bytes").mapInPandas(
-        _quality_batches, QUALITY_SCHEMA
+    return map_batches(
+        images.select("image_id", "bytes"),
+        _quality_frame,
+        QUALITY_SCHEMA,
     )
 
 

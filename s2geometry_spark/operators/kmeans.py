@@ -38,6 +38,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions import map_batches
+
 #: fixed-point scale: 2^20 grid units per 1.0 of embedding value
 KMEANS_Q = 1 << 20
 #: init rule shared with ivf_topk: every-97th vec_id, first k in id order
@@ -77,24 +79,18 @@ def _assign(qvecs: DataFrame, C: np.ndarray, with_d2: bool) -> DataFrame:
         fields.append(StructField("d2", LongType(), False))
     schema = StructType(fields)
 
-    def batches(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                yield pd.DataFrame(
-                    {f.name: pd.Series([], dtype="int64") for f in schema.fields}
-                )
-                continue
-            A = np.array(pdf["a"].tolist(), dtype=np.int64)
-            # exact integer squared distances; argmin returns the FIRST
-            # minimum = lowest cluster index, matching ORDER BY d2, cl
-            D = ((A[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-            cl = np.argmin(D, axis=1)
-            out = {"vec_id": pdf["vec_id"].astype("int64"), "cluster": cl}
-            if with_d2:
-                out["d2"] = D[np.arange(len(A)), cl]
-            yield pd.DataFrame(out)
+    def assign(pdf):
+        A = np.array(pdf["a"].tolist(), dtype=np.int64)
+        # exact integer squared distances; argmin returns the FIRST
+        # minimum = lowest cluster index, matching ORDER BY d2, cl
+        D = ((A[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
+        cl = np.argmin(D, axis=1)
+        out = {"vec_id": pdf["vec_id"].astype("int64"), "cluster": cl}
+        if with_d2:
+            out["d2"] = D[np.arange(len(A)), cl]
+        return pd.DataFrame(out)
 
-    return qvecs.mapInPandas(batches, schema=schema)
+    return map_batches(qvecs, assign, schema)
 
 
 def _update(qvecs: DataFrame, assigned: DataFrame, C_prev: np.ndarray) -> np.ndarray:
@@ -272,14 +268,7 @@ def semdedup_pairs(
 
     def pairs(kv, pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) < 2:
-            return pd.DataFrame(
-                {
-                    "vec_a": pd.Series(dtype="int64"),
-                    "vec_b": pd.Series(dtype="int64"),
-                    "cluster": pd.Series(dtype="int64"),
-                    "cosine": pd.Series(dtype="float64"),
-                }
-            )
+            return pd.DataFrame()
         pdf = pdf.sort_values("vec_id")
         ids = pdf["vec_id"].to_numpy()
         A = np.array(pdf["embedding"].tolist(), dtype=np.float64)

@@ -27,6 +27,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 
 from .. import functions as s2f
+from ..functions import map_batches
 from ..kernels import cellid, metrics
 
 # Hard cap on queries allowed into the brute-force fallback: beyond this
@@ -149,17 +150,7 @@ def _stage(
 
     def group_topk(key, qdf: pd.DataFrame, pdf: pd.DataFrame):
         if len(qdf) == 0 or len(pdf) == 0:
-            return pd.DataFrame(
-                {
-                    qid: pd.Series(dtype="int64"),
-                    "qx": pd.Series(dtype="float64"),
-                    "qy": pd.Series(dtype="float64"),
-                    "qz": pd.Series(dtype="float64"),
-                    "q_cell": pd.Series(dtype="int64"),
-                    pid: pd.Series(dtype="int64"),
-                    "dist_chord2": pd.Series(dtype="float64"),
-                }
-            )
+            return pd.DataFrame()
         p_blk = pdf["p_blk"].to_numpy(np.int64)
         order_p = np.argsort(p_blk, kind="stable")
         p_blk_s = p_blk[order_p]
@@ -205,7 +196,7 @@ def _stage(
             out_p.append(ids2[fin].reshape(-1))
             out_d.append(np.take_along_axis(D2, fin, axis=1).reshape(-1))
         if not out_q:
-            return group_topk(key, qdf.iloc[:0], pdf.iloc[:0])
+            return pd.DataFrame()
         return pd.DataFrame(
             {
                 qid: np.concatenate(out_q),
@@ -416,58 +407,44 @@ def distance_to_boundary_join(
     sc = points.sparkSession.sparkContext
     bc = sc.broadcast((A, B, codes, eidxs, loop_data))
 
-    def kern(it):
+    def kern(pdf):
         A, B, codes, eidxs, loop_data = bc.value
         m = A.shape[0]
-        for pdf in it:
-            if len(pdf) == 0:
-                yield pd.DataFrame(
-                    {
-                        "pid": pd.Series(dtype="int64"),
-                        "_code": pd.Series(dtype="int64"),
-                        "edge_idx": pd.Series(dtype="int64"),
-                        "dist_chord2": pd.Series(dtype="float64"),
-                        "inside": pd.Series(dtype="bool"),
-                        "px": pd.Series(dtype="float64"),
-                        "py": pd.Series(dtype="float64"),
-                        "pz": pd.Series(dtype="float64"),
-                    }
-                )
-                continue
-            X = pdf[["x", "y", "z"]].to_numpy(np.float64)
-            n = X.shape[0]
-            best_d = np.full(n, np.inf)
-            best_j = np.zeros(n, np.int64)
-            for j in range(m):
-                Aj = np.broadcast_to(A[j], (n, 3))
-                Bj = np.broadcast_to(B[j], (n, 3))
-                d = measures.point_edge_chord2(X, Aj, Bj)
-                upd = d < best_d  # strict: first (smallest) j wins ties
-                best_d = np.where(upd, d, best_d)
-                best_j = np.where(upd, j, best_j)
-            inside = np.zeros(n, bool)
-            for V, oi in loop_data:
-                inside |= predicates.loop_contains_points(V, oi, X)
-            # S2Polygon::Project semantics: the point itself when inside,
-            # else the closest boundary point on the winning edge
-            P = measures.project_to_edge_pinned(X, A[best_j], B[best_j])
-            px = np.where(inside, X[:, 0], P[:, 0])
-            py = np.where(inside, X[:, 1], P[:, 1])
-            pz = np.where(inside, X[:, 2], P[:, 2])
-            yield pd.DataFrame(
-                {
-                    "pid": pdf["pid"].to_numpy(np.int64),
-                    "_code": codes[best_j],
-                    "edge_idx": eidxs[best_j],
-                    "dist_chord2": best_d,
-                    "inside": inside,
-                    "px": px,
-                    "py": py,
-                    "pz": pz,
-                }
-            )
+        X = pdf[["x", "y", "z"]].to_numpy(np.float64)
+        n = X.shape[0]
+        best_d = np.full(n, np.inf)
+        best_j = np.zeros(n, np.int64)
+        for j in range(m):
+            Aj = np.broadcast_to(A[j], (n, 3))
+            Bj = np.broadcast_to(B[j], (n, 3))
+            d = measures.point_edge_chord2(X, Aj, Bj)
+            upd = d < best_d  # strict: first (smallest) j wins ties
+            best_d = np.where(upd, d, best_d)
+            best_j = np.where(upd, j, best_j)
+        inside = np.zeros(n, bool)
+        for V, oi in loop_data:
+            inside |= predicates.loop_contains_points(V, oi, X)
+        # S2Polygon::Project semantics: the point itself when inside,
+        # else the closest boundary point on the winning edge
+        P = measures.project_to_edge_pinned(X, A[best_j], B[best_j])
+        px = np.where(inside, X[:, 0], P[:, 0])
+        py = np.where(inside, X[:, 1], P[:, 1])
+        pz = np.where(inside, X[:, 2], P[:, 2])
+        return pd.DataFrame(
+            {
+                "pid": pdf["pid"].to_numpy(np.int64),
+                "_code": codes[best_j],
+                "edge_idx": eidxs[best_j],
+                "dist_chord2": best_d,
+                "inside": inside,
+                "px": px,
+                "py": py,
+                "pz": pz,
+            }
+        )
 
-    out = points.select("pid", "x", "y", "z").mapInPandas(
+    out = map_batches(
+        points.select("pid", "x", "y", "z"),
         kern,
         "pid long, _code long, edge_idx long, dist_chord2 double, "
         "inside boolean, px double, py double, pz double",

@@ -38,6 +38,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from ..functions import map_batches
 from ..kernels import cellid, measures
 from .edge_join import _edge_coverings_flat
 from .knn import _min_outside_chord2, _union_all
@@ -78,8 +79,10 @@ def _edge_keys_for_levels(edges: DataFrame, stage_levels: list[int]) -> DataFram
          block cell it touches).
     """
     stage_levels = sorted(set(stage_levels))
-    return edges.select("eid", *E_COLS).mapInPandas(
-        _edge_cover_batches(stage_levels), _edge_cover_schema(stage_levels)
+    return map_batches(
+        edges.select("eid", *E_COLS),
+        _edge_covers(stage_levels),
+        _edge_cover_schema(stage_levels),
     )
 
 
@@ -91,66 +94,48 @@ def _edge_cover_schema(stage_levels: list[int]) -> str:
     )
 
 
-def _edge_cover_batches(stage_levels: list[int]):
-    """mapInPandas generator for the edge-covering key table; exposed at
-    module level so the zero-row-Arrow-batch path is unit-testable (an
-    empty batch must still emit every ``g_<level>`` schema column)."""
+def _edge_covers(stage_levels: list[int]):
+    """Per-batch kernel for the edge-covering key table."""
 
-    def batches(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                yield pd.DataFrame(
-                    {
-                        "eid": pd.Series(dtype="int64"),
-                        "key": pd.Series(dtype="int64"),
-                        "lv": pd.Series(dtype="int32"),
-                        "is_cov": pd.Series(dtype="bool"),
-                        **{
-                            f"g_{sl}": pd.Series(dtype="int64")
-                            for sl in stage_levels
-                        },
-                        **{c: pd.Series(dtype="float64") for c in E_COLS},
-                    }
-                )
+    def covers(pdf):
+        A0 = pdf[E_COLS[:3]].to_numpy(np.float64)
+        A1 = pdf[E_COLS[3:]].to_numpy(np.float64)
+        owner, cell = _edge_coverings_flat(A0, A1)
+        lv = cellid.level(cell)
+        own_all = [owner]
+        key_all = [cell]
+        lv_all = [lv]
+        cov_all = [np.ones(len(owner), bool)]
+        for p in stage_levels:
+            sel = np.flatnonzero(lv > p)
+            if sel.size == 0:
                 continue
-            A0 = pdf[E_COLS[:3]].to_numpy(np.float64)
-            A1 = pdf[E_COLS[3:]].to_numpy(np.float64)
-            owner, cell = _edge_coverings_flat(A0, A1)
-            lv = cellid.level(cell)
-            own_all = [owner]
-            key_all = [cell]
-            lv_all = [lv]
-            cov_all = [np.ones(len(owner), bool)]
-            for p in stage_levels:
-                sel = np.flatnonzero(lv > p)
-                if sel.size == 0:
-                    continue
-                own_all.append(owner[sel])
-                key_all.append(cellid.parent(cell[sel], p))
-                lv_all.append(np.full(sel.size, p))
-                cov_all.append(np.zeros(sel.size, bool))
-            own = np.concatenate(own_all)
-            ids = pdf["eid"].to_numpy(np.int64)[own]
-            keys_u = np.concatenate(key_all).astype(np.uint64)
-            out = pd.DataFrame(
-                {
-                    "eid": ids,
-                    "key": cellid.to_biased(keys_u),
-                    "lv": np.concatenate(lv_all).astype(np.int32),
-                    "is_cov": np.concatenate(cov_all),
-                }
-            )
-            for sl in stage_levels:
-                out[f"g_{sl}"] = _mixed_group(keys_u, max(sl - 4, 0))
-            for i, c in enumerate(E_COLS):
-                src = A0 if i < 3 else A1
-                out[c] = src[own, i % 3]
-            out = out.sort_values("is_cov", ascending=False).drop_duplicates(
-                subset=["eid", "key"]
-            )
-            yield out
+            own_all.append(owner[sel])
+            key_all.append(cellid.parent(cell[sel], p))
+            lv_all.append(np.full(sel.size, p))
+            cov_all.append(np.zeros(sel.size, bool))
+        own = np.concatenate(own_all)
+        ids = pdf["eid"].to_numpy(np.int64)[own]
+        keys_u = np.concatenate(key_all).astype(np.uint64)
+        out = pd.DataFrame(
+            {
+                "eid": ids,
+                "key": cellid.to_biased(keys_u),
+                "lv": np.concatenate(lv_all).astype(np.int32),
+                "is_cov": np.concatenate(cov_all),
+            }
+        )
+        for sl in stage_levels:
+            out[f"g_{sl}"] = _mixed_group(keys_u, max(sl - 4, 0))
+        for i, c in enumerate(E_COLS):
+            src = A0 if i < 3 else A1
+            out[c] = src[own, i % 3]
+        out = out.sort_values("is_cov", ascending=False).drop_duplicates(
+            subset=["eid", "key"]
+        )
+        return out
 
-    return batches
+    return covers
 
 
 def _auto_start_level(n_edges: int, k: int) -> int:
@@ -165,7 +150,7 @@ def _auto_start_level(n_edges: int, k: int) -> int:
 
 
 def _point_keys_flat(level: int, anc_min_level: int, group_level: int):
-    """mapInPandas generator: one output row per (query, key) — the 3x3
+    """Per-batch kernel: one output row per (query, key) — the 3x3
     block at ``level`` plus block-cell ancestors down to
     ``anc_min_level``, each with its mixed-level cogroup key.  Fully
     vectorized (a per-query Python loop building array<struct> rows for
@@ -173,42 +158,35 @@ def _point_keys_flat(level: int, anc_min_level: int, group_level: int):
 
     q_cols = ["qid", "qx", "qy", "qz", "q_cell"]
 
-    def batches(it):
-        for pdf in it:
-            pdf = pdf[q_cols]
-            if len(pdf) == 0:
-                out = pdf.copy()
-                out["key"] = pd.Series(dtype="int64")
-                out["g"] = pd.Series(dtype="int64")
-                yield out
-                continue
-            ids = cellid.from_biased(pdf["q_cell"].to_numpy(np.int64))
-            n = len(ids)
-            own = cellid.parent(ids, level)
-            idx, nbrs = cellid.append_all_neighbors(own, level)
-            # flat (query row, block cell) pairs: self + neighbors
-            qi = np.concatenate([np.arange(n, dtype=np.int64), idx.astype(np.int64)])
-            bc = np.concatenate([own, nbrs]).astype(np.uint64)
-            # ancestors of every block cell at each coarser stage level
-            all_qi = [qi]
-            all_keys = [bc]
-            for lv in range(anc_min_level, level):
-                all_qi.append(qi)
-                all_keys.append(cellid.parent(bc, lv))
-            fqi = np.concatenate(all_qi)
-            fkeys = np.concatenate(all_keys)
-            # per-query dedup of keys without a Python loop: unique on
-            # the (query, key) composite
-            comp = np.stack([fqi, fkeys.view(np.int64)], axis=1)
-            uq = np.unique(comp, axis=0)
-            rqi = uq[:, 0]
-            rkeys = uq[:, 1].view(np.uint64)
-            out = pdf.iloc[rqi].reset_index(drop=True)
-            out["key"] = cellid.to_biased(rkeys)
-            out["g"] = _mixed_group(rkeys, group_level)
-            yield out
+    def point_keys(pdf):
+        pdf = pdf[q_cols]
+        ids = cellid.from_biased(pdf["q_cell"].to_numpy(np.int64))
+        n = len(ids)
+        own = cellid.parent(ids, level)
+        idx, nbrs = cellid.append_all_neighbors(own, level)
+        # flat (query row, block cell) pairs: self + neighbors
+        qi = np.concatenate([np.arange(n, dtype=np.int64), idx.astype(np.int64)])
+        bc = np.concatenate([own, nbrs]).astype(np.uint64)
+        # ancestors of every block cell at each coarser stage level
+        all_qi = [qi]
+        all_keys = [bc]
+        for lv in range(anc_min_level, level):
+            all_qi.append(qi)
+            all_keys.append(cellid.parent(bc, lv))
+        fqi = np.concatenate(all_qi)
+        fkeys = np.concatenate(all_keys)
+        # per-query dedup of keys without a Python loop: unique on
+        # the (query, key) composite
+        comp = np.stack([fqi, fkeys.view(np.int64)], axis=1)
+        uq = np.unique(comp, axis=0)
+        rqi = uq[:, 0]
+        rkeys = uq[:, 1].view(np.uint64)
+        out = pdf.iloc[rqi].reset_index(drop=True)
+        out["key"] = cellid.to_biased(rkeys)
+        out["g"] = _mixed_group(rkeys, group_level)
+        return out
 
-    return batches
+    return point_keys
 
 
 def _mixed_group(keys_u64: np.ndarray, group_level: int) -> np.ndarray:
@@ -247,26 +225,16 @@ def _stage(
     # Python/pandas overhead — measured as the dominant stage cost at
     # sf0.1 (6k groups x ~2 ms)
     gl = max(level - 4, 0)
-    q = queries.mapInPandas(
+    q = map_batches(
+        queries,
         _point_keys_flat(level, min(anc_min_level, level), gl),
         "qid long, qx double, qy double, qz double, q_cell long, "
         "key long, g long",
     )
 
     def group_topk(key, qdf: pd.DataFrame, edf: pd.DataFrame):
-        empty = pd.DataFrame(
-            {
-                "qid": pd.Series(dtype="int64"),
-                "q_cell": pd.Series(dtype="int64"),
-                "qx": pd.Series(dtype="float64"),
-                "qy": pd.Series(dtype="float64"),
-                "qz": pd.Series(dtype="float64"),
-                "eid": pd.Series(dtype="int64"),
-                "dist_chord2": pd.Series(dtype="float64"),
-            }
-        )
         if len(qdf) == 0 or len(edf) == 0:
-            return empty
+            return pd.DataFrame()
         e_key = edf["key"].to_numpy(np.int64)
         order_e = np.argsort(e_key, kind="stable")
         e_key_s = e_key[order_e]
@@ -284,7 +252,7 @@ def _stage(
         cnt = hi - lo
         total = int(cnt.sum())
         if total == 0:
-            return empty
+            return pd.DataFrame()
         ii = np.repeat(np.arange(len(q_key)), cnt)
         starts = np.zeros(len(q_key), np.int64)
         np.cumsum(cnt[:-1], out=starts[1:])
@@ -447,25 +415,15 @@ def closest_edges_join(
     )
     cand = remaining.crossJoin(edges_cached)
 
-    def refine(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                yield pd.DataFrame(
-                    {
-                        "qid": pd.Series(dtype="int64"),
-                        "eid": pd.Series(dtype="int64"),
-                        "dist_chord2": pd.Series(dtype="float64"),
-                    }
-                )
-                continue
-            X = pdf[["qx", "qy", "qz"]].to_numpy(np.float64)
-            A = pdf[E_COLS[:3]].to_numpy(np.float64)
-            B = pdf[E_COLS[3:]].to_numpy(np.float64)
-            out = pdf[["qid", "eid"]].copy()
-            out["dist_chord2"] = measures.point_edge_chord2(X, A, B)
-            yield out
+    def refine(pdf):
+        X = pdf[["qx", "qy", "qz"]].to_numpy(np.float64)
+        A = pdf[E_COLS[:3]].to_numpy(np.float64)
+        B = pdf[E_COLS[3:]].to_numpy(np.float64)
+        out = pdf[["qid", "eid"]].copy()
+        out["dist_chord2"] = measures.point_edge_chord2(X, A, B)
+        return out
 
-    scored = cand.mapInPandas(refine, "qid long, eid long, dist_chord2 double")
+    scored = map_batches(cand, refine, "qid long, eid long, dist_chord2 double")
     w = Window.partitionBy("qid").orderBy(
         F.col("dist_chord2").asc(), F.col("eid").asc()
     )
@@ -495,25 +453,15 @@ def furthest_edges_join(
     """
     cand = queries.crossJoin(edges)
 
-    def refine(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                yield pd.DataFrame(
-                    {
-                        "qid": pd.Series(dtype="int64"),
-                        "eid": pd.Series(dtype="int64"),
-                        "dist_chord2": pd.Series(dtype="float64"),
-                    }
-                )
-                continue
-            X = pdf[["qx", "qy", "qz"]].to_numpy(np.float64)
-            A = pdf[E_COLS[:3]].to_numpy(np.float64)
-            B = pdf[E_COLS[3:]].to_numpy(np.float64)
-            out = pdf[["qid", "eid"]].copy()
-            out["dist_chord2"] = measures.point_edge_max_chord2(X, A, B)
-            yield out
+    def refine(pdf):
+        X = pdf[["qx", "qy", "qz"]].to_numpy(np.float64)
+        A = pdf[E_COLS[:3]].to_numpy(np.float64)
+        B = pdf[E_COLS[3:]].to_numpy(np.float64)
+        out = pdf[["qid", "eid"]].copy()
+        out["dist_chord2"] = measures.point_edge_max_chord2(X, A, B)
+        return out
 
-    scored = cand.mapInPandas(refine, "qid long, eid long, dist_chord2 double")
+    scored = map_batches(cand, refine, "qid long, eid long, dist_chord2 double")
     w = Window.partitionBy("qid").orderBy(
         F.col("dist_chord2").desc(), F.col("eid").asc()
     )
@@ -548,30 +496,18 @@ def project_to_closest_edges(
         edges.select("eid", *E_COLS), "eid"
     )
 
-    def proj(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                yield pd.DataFrame(
-                    {
-                        "qid": pd.Series(dtype="int64"),
-                        "eid": pd.Series(dtype="int64"),
-                        "dist_chord2": pd.Series(dtype="float64"),
-                        "px": pd.Series(dtype="float64"),
-                        "py": pd.Series(dtype="float64"),
-                        "pz": pd.Series(dtype="float64"),
-                    }
-                )
-                continue
-            X = pdf[["qx", "qy", "qz"]].to_numpy(np.float64)
-            A = pdf[E_COLS[:3]].to_numpy(np.float64)
-            B = pdf[E_COLS[3:]].to_numpy(np.float64)
-            P = measures.project_to_edge_pinned(X, A, B)
-            out = pdf[["qid", "eid", "dist_chord2"]].copy()
-            out["px"] = P[:, 0]
-            out["py"] = P[:, 1]
-            out["pz"] = P[:, 2]
-            yield out
+    def proj(pdf):
+        X = pdf[["qx", "qy", "qz"]].to_numpy(np.float64)
+        A = pdf[E_COLS[:3]].to_numpy(np.float64)
+        B = pdf[E_COLS[3:]].to_numpy(np.float64)
+        P = measures.project_to_edge_pinned(X, A, B)
+        out = pdf[["qid", "eid", "dist_chord2"]].copy()
+        out["px"] = P[:, 0]
+        out["py"] = P[:, 1]
+        out["pz"] = P[:, 2]
+        return out
 
-    return j.mapInPandas(
-        proj, "qid long, eid long, dist_chord2 double, px double, py double, pz double"
+    return map_batches(
+        j,
+        proj, "qid long, eid long, dist_chord2 double, px double, py double, pz double",
     )

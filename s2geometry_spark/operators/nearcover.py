@@ -36,6 +36,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions import map_batches
 from ..kernels.nearcover import nearly_covers
 from .alignment import _verts_to_np, chains_as_arrays
 
@@ -68,25 +69,25 @@ def nearly_covers_pairs(
         )
     )
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for a, b, kind, va, vb in zip(
-                pdf["chain_a"], pdf["chain_b"], pdf["kind"], pdf["va"], pdf["vb"]
-            ):
-                A = _verts_to_np(va)
-                B = _verts_to_np(vb)
-                rows.append(
-                    (a, b, kind, len(A), len(B),
-                     int(nearly_covers(A, B, ch2_tol)))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["chain_a", "chain_b", "kind", "n_a", "n_b", "covers"],
+    def covers(pdf):
+        rows = []
+        for a, b, kind, va, vb in zip(
+            pdf["chain_a"], pdf["chain_b"], pdf["kind"], pdf["va"], pdf["vb"]
+        ):
+            A = _verts_to_np(va)
+            B = _verts_to_np(vb)
+            rows.append(
+                (a, b, kind, len(A), len(B),
+                 int(nearly_covers(A, B, ch2_tol)))
             )
+        return pd.DataFrame(
+            rows,
+            columns=["chain_a", "chain_b", "kind", "n_a", "n_b", "covers"],
+        )
 
-    return joined.mapInPandas(
-        batches,
+    return map_batches(
+        joined,
+        covers,
         "chain_a long, chain_b long, kind string, n_a long, n_b long, covers int",
     )
 

@@ -24,6 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .. import oracle
+from ..functions import map_batches
 from ..kernels import cellid, paddedcell
 
 #: 26 dyadic half-sizes 2^-3 .. 2^-28 — rect levels span the hierarchy
@@ -74,37 +75,30 @@ def shrink_to_fit_cells(rects: DataFrame, padding: float) -> DataFrame:
     ru_lo/ru_hi/rv_lo/rv_hi double), rect required to intersect the
     face's padded bound (the reference's DCHECK)."""
 
-    def batches(it):
-        for pdf in it:
-            if not len(pdf):
-                yield pd.DataFrame(
-                    {
-                        c: pd.Series(dtype="int64")
-                        for c in ("rid", "face", "seed_cell", "seed_level")
-                    }
-                )
-                continue
-            face = pdf["face"].to_numpy(np.int64).astype(np.uint64)
-            ids = (face << np.uint64(61)) | np.uint64(1 << 60)
-            seed = paddedcell.shrink_to_fit(
-                ids,
-                padding,
-                pdf["ru_lo"].to_numpy(np.float64),
-                pdf["ru_hi"].to_numpy(np.float64),
-                pdf["rv_lo"].to_numpy(np.float64),
-                pdf["rv_hi"].to_numpy(np.float64),
-            )
-            yield pd.DataFrame(
-                {
-                    "rid": pdf["rid"].to_numpy(np.int64),
-                    "face": face.astype(np.int64),
-                    "seed_cell": cellid.to_biased(seed),
-                    "seed_level": cellid.level(seed).astype(np.int64),
-                }
-            )
+    def shrink(pdf):
+        face = pdf["face"].to_numpy(np.int64).astype(np.uint64)
+        ids = (face << np.uint64(61)) | np.uint64(1 << 60)
+        seed = paddedcell.shrink_to_fit(
+            ids,
+            padding,
+            pdf["ru_lo"].to_numpy(np.float64),
+            pdf["ru_hi"].to_numpy(np.float64),
+            pdf["rv_lo"].to_numpy(np.float64),
+            pdf["rv_hi"].to_numpy(np.float64),
+        )
+        return pd.DataFrame(
+            {
+                "rid": pdf["rid"].to_numpy(np.int64),
+                "face": face.astype(np.int64),
+                "seed_cell": cellid.to_biased(seed),
+                "seed_level": cellid.level(seed).astype(np.int64),
+            }
+        )
 
-    return rects.mapInPandas(
-        batches, "rid long, face long, seed_cell long, seed_level long"
+    return map_batches(
+        rects,
+        shrink,
+        "rid long, face long, seed_cell long, seed_level long",
     )
 
 

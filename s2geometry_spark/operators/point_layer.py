@@ -44,6 +44,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import map_batches
 from ..kernels import builder, cellid
 
 _SNAPPED_SCHEMA = (
@@ -58,39 +59,25 @@ def snap_edge_endpoints(edges: DataFrame, level: int) -> DataFrame:
     site/site_b are the biased snap cells of A/B and cx..cz is the
     A-side snap-site center (the point the layer would emit)."""
 
-    def batches(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                yield pd.DataFrame(
-                    {
-                        "eid": pd.Series(dtype="int64"),
-                        "label": pd.Series(dtype="int64"),
-                        "site": pd.Series(dtype="int64"),
-                        "site_b": pd.Series(dtype="int64"),
-                        "cx": pd.Series(dtype="float64"),
-                        "cy": pd.Series(dtype="float64"),
-                        "cz": pd.Series(dtype="float64"),
-                    }
-                )
-                continue
-            A = pdf[["ax", "ay", "az"]].to_numpy(np.float64)
-            B = pdf[["bx", "by", "bz"]].to_numpy(np.float64)
-            ca = builder.snap_cells(A, level)
-            cb = builder.snap_cells(B, level)
-            S = builder.snap_to_cell_centers(A, level)
-            yield pd.DataFrame(
-                {
-                    "eid": pdf["eid"].to_numpy(np.int64),
-                    "label": pdf["label"].to_numpy(np.int64),
-                    "site": cellid.to_biased(ca),
-                    "site_b": cellid.to_biased(cb),
-                    "cx": S[:, 0],
-                    "cy": S[:, 1],
-                    "cz": S[:, 2],
-                }
-            )
+    def snap_ends(pdf):
+        A = pdf[["ax", "ay", "az"]].to_numpy(np.float64)
+        B = pdf[["bx", "by", "bz"]].to_numpy(np.float64)
+        ca = builder.snap_cells(A, level)
+        cb = builder.snap_cells(B, level)
+        S = builder.snap_to_cell_centers(A, level)
+        return pd.DataFrame(
+            {
+                "eid": pdf["eid"].to_numpy(np.int64),
+                "label": pdf["label"].to_numpy(np.int64),
+                "site": cellid.to_biased(ca),
+                "site_b": cellid.to_biased(cb),
+                "cx": S[:, 0],
+                "cy": S[:, 1],
+                "cz": S[:, 2],
+            }
+        )
 
-    return edges.mapInPandas(batches, _SNAPPED_SCHEMA)
+    return map_batches(edges, snap_ends, _SNAPPED_SCHEMA)
 
 
 def point_vector_layer(

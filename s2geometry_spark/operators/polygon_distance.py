@@ -34,6 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import map_batches
 from ..kernels import predicates
 from ..kernels.measures import point_edge_chord2
 
@@ -86,54 +87,54 @@ def loop_pair_distance(
         .repartition(n_slices, "chain_a", "chain_b")
     )
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for a, b, va, vb in zip(
-                pdf["chain_a"], pdf["chain_b"], pdf["va"], pdf["vb"]
-            ):
-                A = _verts_to_np(va)
-                B = _verts_to_np(vb)
-                A0, A1 = _closed_edges(A)
-                B0, B1 = _closed_edges(B)
-                n, m = len(A), len(B)
-                ii, jj = np.meshgrid(np.arange(n), np.arange(m), indexing="ij")
-                ii, jj = ii.ravel(), jj.ravel()
-                ea0, ea1 = A0[ii], A1[ii]
-                eb0, eb1 = B0[jj], B1[jj]
-                cross = predicates.edges_cross_batch(ea0, ea1, eb0, eb1, robust=False)
-                k = np.flatnonzero(cross)
-                if k.size:
-                    k0 = int(k[0])  # i-major = min (i, j)
-                    rows.append((a, b, 1, 0.0, int(ii[k0]), int(jj[k0])))
-                    continue
-                if _contains_parity(A0, A1, B[0]):
-                    rows.append((a, b, 2, 0.0, -1, -1))
-                    continue
-                if _contains_parity(B0, B1, A[0]):
-                    rows.append((a, b, 3, 0.0, -1, -1))
-                    continue
-                d = np.minimum(
-                    np.minimum(
-                        point_edge_chord2(ea0, eb0, eb1),
-                        point_edge_chord2(ea1, eb0, eb1),
-                    ),
-                    np.minimum(
-                        point_edge_chord2(eb0, ea0, ea1),
-                        point_edge_chord2(eb1, ea0, ea1),
-                    ),
-                )
-                k0 = int(np.argmin(d))
-                rows.append((a, b, 0, float(d[k0]), int(ii[k0]), int(jj[k0])))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "chain_a", "chain_b", "relation", "min_chord2", "a_edge", "b_edge",
-                ],
+    def relate(pdf):
+        rows = []
+        for a, b, va, vb in zip(
+            pdf["chain_a"], pdf["chain_b"], pdf["va"], pdf["vb"]
+        ):
+            A = _verts_to_np(va)
+            B = _verts_to_np(vb)
+            A0, A1 = _closed_edges(A)
+            B0, B1 = _closed_edges(B)
+            n, m = len(A), len(B)
+            ii, jj = np.meshgrid(np.arange(n), np.arange(m), indexing="ij")
+            ii, jj = ii.ravel(), jj.ravel()
+            ea0, ea1 = A0[ii], A1[ii]
+            eb0, eb1 = B0[jj], B1[jj]
+            cross = predicates.edges_cross_batch(ea0, ea1, eb0, eb1, robust=False)
+            k = np.flatnonzero(cross)
+            if k.size:
+                k0 = int(k[0])  # i-major = min (i, j)
+                rows.append((a, b, 1, 0.0, int(ii[k0]), int(jj[k0])))
+                continue
+            if _contains_parity(A0, A1, B[0]):
+                rows.append((a, b, 2, 0.0, -1, -1))
+                continue
+            if _contains_parity(B0, B1, A[0]):
+                rows.append((a, b, 3, 0.0, -1, -1))
+                continue
+            d = np.minimum(
+                np.minimum(
+                    point_edge_chord2(ea0, eb0, eb1),
+                    point_edge_chord2(ea1, eb0, eb1),
+                ),
+                np.minimum(
+                    point_edge_chord2(eb0, ea0, ea1),
+                    point_edge_chord2(eb1, ea0, ea1),
+                ),
             )
+            k0 = int(np.argmin(d))
+            rows.append((a, b, 0, float(d[k0]), int(ii[k0]), int(jj[k0])))
+        return pd.DataFrame(
+            rows,
+            columns=[
+                "chain_a", "chain_b", "relation", "min_chord2", "a_edge", "b_edge",
+            ],
+        )
 
-    return joined.mapInPandas(
-        batches,
+    return map_batches(
+        joined,
+        relate,
         "chain_a long, chain_b long, relation int, "
         "min_chord2 double, a_edge long, b_edge long",
     )
@@ -153,40 +154,33 @@ def shrink_loops(
 
     arrs = chains_as_arrays(loops, chain_col)
 
-    def batches(it):
-        for pdf in it:
-            frames = []
-            for cid, cell in zip(pdf[chain_col], pdf["verts"]):
-                V = _verts_to_np(cell)
-                mn, mx = V.min(axis=0), V.max(axis=0)
-                m = (mn + mx) * 0.5
-                cn = np.sqrt((m[0] * m[0] + m[1] * m[1]) + m[2] * m[2])
-                c = m / cn
-                w = c[None, :] + t * (V - c[None, :])
-                nn = np.sqrt((w[:, 0] * w[:, 0] + w[:, 1] * w[:, 1]) + w[:, 2] * w[:, 2])
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            chain_col: cid,
-                            "seq": np.arange(len(V)),
-                            "x": w[:, 0] / nn,
-                            "y": w[:, 1] / nn,
-                            "z": w[:, 2] / nn,
-                        }
-                    )
+    def shrink(pdf):
+        frames = []
+        for cid, cell in zip(pdf[chain_col], pdf["verts"]):
+            V = _verts_to_np(cell)
+            mn, mx = V.min(axis=0), V.max(axis=0)
+            m = (mn + mx) * 0.5
+            cn = np.sqrt((m[0] * m[0] + m[1] * m[1]) + m[2] * m[2])
+            c = m / cn
+            w = c[None, :] + t * (V - c[None, :])
+            nn = np.sqrt((w[:, 0] * w[:, 0] + w[:, 1] * w[:, 1]) + w[:, 2] * w[:, 2])
+            frames.append(
+                pd.DataFrame(
+                    {
+                        chain_col: cid,
+                        "seq": np.arange(len(V)),
+                        "x": w[:, 0] / nn,
+                        "y": w[:, 1] / nn,
+                        "z": w[:, 2] / nn,
+                    }
                 )
-            yield pd.concat(frames) if frames else pd.DataFrame(
-                {
-                    chain_col: pd.Series(dtype="int64"),
-                    "seq": pd.Series(dtype="int64"),
-                    "x": pd.Series(dtype="float64"),
-                    "y": pd.Series(dtype="float64"),
-                    "z": pd.Series(dtype="float64"),
-                }
             )
+        return pd.concat(frames)
 
-    return arrs.mapInPandas(
-        batches, f"{chain_col} long, seq long, x double, y double, z double"
+    return map_batches(
+        arrs,
+        shrink,
+        f"{chain_col} long, seq long, x double, y double, z double",
     )
 
 

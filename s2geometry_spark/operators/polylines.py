@@ -20,6 +20,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions import map_batches
 from ..kernels import predicates
 from ..kernels.booleanop import edge_intersection
 from ..kernels.regions import Polygon
@@ -616,40 +617,40 @@ def chain_pair_min_distance(
         .repartition(n_slices, "chain_a", "chain_b")
     )
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for a, b, va, vb in zip(pdf["chain_a"], pdf["chain_b"], pdf["va"], pdf["vb"]):
-                A = _verts_to_np(va)
-                B = _verts_to_np(vb)
-                n, m = len(A), len(B)
-                ii, jj = np.meshgrid(np.arange(n - 1), np.arange(m - 1), indexing="ij")
-                ii, jj = ii.ravel(), jj.ravel()
-                A0, A1 = A[ii], A[ii + 1]
-                B0, B1 = B[jj], B[jj + 1]
-                cross = predicates.edges_cross_batch(A0, A1, B0, B1, robust=False)
-                d = np.minimum(
-                    np.minimum(
-                        point_edge_chord2(A0, B0, B1),
-                        point_edge_chord2(A1, B0, B1),
-                    ),
-                    np.minimum(
-                        point_edge_chord2(B0, A0, A1),
-                        point_edge_chord2(B1, A0, A1),
-                    ),
-                )
-                d = np.where(cross, 0.0, d)
-                k = int(np.argmin(d))  # first min in i-major order =
-                # (a_edge, b_edge) lexicographic tie-break
-                rows.append((a, b, n, m, float(d[k]), int(ii[k]), int(jj[k])))
-            yield pd.DataFrame(
-                rows,
-                columns=["chain_a", "chain_b", "n_a", "n_b",
-                         "min_chord2", "a_edge", "b_edge"],
+    def min_pair(pdf):
+        rows = []
+        for a, b, va, vb in zip(pdf["chain_a"], pdf["chain_b"], pdf["va"], pdf["vb"]):
+            A = _verts_to_np(va)
+            B = _verts_to_np(vb)
+            n, m = len(A), len(B)
+            ii, jj = np.meshgrid(np.arange(n - 1), np.arange(m - 1), indexing="ij")
+            ii, jj = ii.ravel(), jj.ravel()
+            A0, A1 = A[ii], A[ii + 1]
+            B0, B1 = B[jj], B[jj + 1]
+            cross = predicates.edges_cross_batch(A0, A1, B0, B1, robust=False)
+            d = np.minimum(
+                np.minimum(
+                    point_edge_chord2(A0, B0, B1),
+                    point_edge_chord2(A1, B0, B1),
+                ),
+                np.minimum(
+                    point_edge_chord2(B0, A0, A1),
+                    point_edge_chord2(B1, A0, A1),
+                ),
             )
+            d = np.where(cross, 0.0, d)
+            k = int(np.argmin(d))  # first min in i-major order =
+            # (a_edge, b_edge) lexicographic tie-break
+            rows.append((a, b, n, m, float(d[k]), int(ii[k]), int(jj[k])))
+        return pd.DataFrame(
+            rows,
+            columns=["chain_a", "chain_b", "n_a", "n_b",
+                     "min_chord2", "a_edge", "b_edge"],
+        )
 
-    return joined.mapInPandas(
-        batches,
+    return map_batches(
+        joined,
+        min_pair,
         "chain_a long, chain_b long, n_a long, n_b long, "
         "min_chord2 double, a_edge long, b_edge long",
     )

@@ -37,6 +37,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..functions import map_batches
 from .ann import cosine_expr, dot_sql, norm_sql
 from .kmeans import KMEANS_INIT_STRIDE, KMEANS_Q, _quantized
 
@@ -72,24 +73,16 @@ def _assign_codes(qvecs: DataFrame, C: np.ndarray) -> DataFrame:
     m, _, sub = C.shape
     schema = "vec_id long, " + ", ".join(f"c{j} long" for j in range(m))
 
-    def batches(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                cols = {"vec_id": pd.Series([], dtype="int64")}
-                cols.update(
-                    {f"c{j}": pd.Series([], dtype="int64") for j in range(m)}
-                )
-                yield pd.DataFrame(cols)
-                continue
-            A = np.array(pdf["a"].tolist(), dtype=np.int64)
-            out = {"vec_id": pdf["vec_id"].astype("int64")}
-            for j in range(m):
-                S = A[:, j * sub : (j + 1) * sub]
-                D = ((S[:, None, :] - C[j][None, :, :]) ** 2).sum(axis=2)
-                out[f"c{j}"] = np.argmin(D, axis=1).astype(np.int64)
-            yield pd.DataFrame(out)
+    def codes_of(pdf):
+        A = np.array(pdf["a"].tolist(), dtype=np.int64)
+        out = {"vec_id": pdf["vec_id"].astype("int64")}
+        for j in range(m):
+            S = A[:, j * sub : (j + 1) * sub]
+            D = ((S[:, None, :] - C[j][None, :, :]) ** 2).sum(axis=2)
+            out[f"c{j}"] = np.argmin(D, axis=1).astype(np.int64)
+        return pd.DataFrame(out)
 
-    return qvecs.mapInPandas(batches, schema)
+    return map_batches(qvecs, codes_of, schema)
 
 
 def _update_codebooks(
@@ -169,38 +162,28 @@ def pq_topk(
     bq = spark.sparkContext.broadcast((qids, LUT))
     n_cand = k * rerank
 
-    def batches(it):
+    def scan(pdf):
         qid_arr, lut = bq.value
-        for pdf in it:
-            if len(pdf) == 0:
-                yield pd.DataFrame(
-                    {
-                        "qid": pd.Series([], dtype="int64"),
-                        "vec_id": pd.Series([], dtype="int64"),
-                        "d2_pq": pd.Series([], dtype="int64"),
-                    }
-                )
+        vids = pdf["vec_id"].to_numpy(np.int64)
+        D = np.zeros((len(qid_arr), len(vids)), dtype=np.int64)
+        for j in range(lut.shape[0]):
+            D += lut[j][:, pdf[f"c{j}"].to_numpy(np.int64)]
+        out_q, out_v, out_d = [], [], []
+        for qi in range(len(qid_arr)):
+            mask = vids != qid_arr[qi]
+            vv, dd = vids[mask], D[qi][mask]
+            if vv.size == 0:
                 continue
-            vids = pdf["vec_id"].to_numpy(np.int64)
-            D = np.zeros((len(qid_arr), len(vids)), dtype=np.int64)
-            for j in range(lut.shape[0]):
-                D += lut[j][:, pdf[f"c{j}"].to_numpy(np.int64)]
-            out_q, out_v, out_d = [], [], []
-            for qi in range(len(qid_arr)):
-                mask = vids != qid_arr[qi]
-                vv, dd = vids[mask], D[qi][mask]
-                if vv.size == 0:
-                    continue
-                take = min(n_cand, vv.size)
-                order = np.lexsort((vv, dd))[:take]
-                out_q.extend([qid_arr[qi]] * take)
-                out_v.extend(vv[order].tolist())
-                out_d.extend(dd[order].tolist())
-            yield pd.DataFrame(
-                {"qid": out_q, "vec_id": out_v, "d2_pq": out_d}
-            )
+            take = min(n_cand, vv.size)
+            order = np.lexsort((vv, dd))[:take]
+            out_q.extend([qid_arr[qi]] * take)
+            out_v.extend(vv[order].tolist())
+            out_d.extend(dd[order].tolist())
+        return pd.DataFrame(
+            {"qid": out_q, "vec_id": out_v, "d2_pq": out_d}
+        )
 
-    cand = codes.mapInPandas(batches, "qid long, vec_id long, d2_pq long")
+    cand = map_batches(codes, scan, "qid long, vec_id long, d2_pq long")
     wq = Window.partitionBy("qid").orderBy(
         F.col("d2_pq").asc(), F.col("vec_id").asc()
     )

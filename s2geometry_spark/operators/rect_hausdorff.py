@@ -47,6 +47,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..functions import map_batches
 from ..kernels.measures import point_edge_chord2, point_edge_chord2_sql
 from ..kernels.portable_trig import (
     cos_portable,
@@ -338,8 +339,9 @@ def rect_hausdorff_pairs(pairs: DataFrame) -> DataFrame:
     """pairs(pair_id, alat_lo..blng_hi) -> (pair_id, dir_ab_chord2,
     dir_ba_chord2, hausdorff_chord2).  One stateless Arrow pass — the
     10^12-row shape is a pure map stage, no shuffle."""
-    return pairs.mapInPandas(
-        lambda it: (rect_hausdorff_kernel(pdf) for pdf in it),
+    return map_batches(
+        pairs,
+        rect_hausdorff_kernel,
         "pair_id long, dir_ab_chord2 double, dir_ba_chord2 double, "
         "hausdorff_chord2 double",
     )

@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from s2geometry_spark.functions import map_batches
 from s2geometry_spark.kernels.faceclip import K_CELL_PADDING
 
 MAX_EDGES_PER_CELL = 10  # mutable_s2shape_index.h:166 default
@@ -292,7 +293,7 @@ def shape_index_lookup(
     for zero benefit)."""
     import pandas as pd
 
-    def batches(it):
+    def to_face_ij(pdf):
         import numpy as np
 
         from s2geometry_spark.kernels.coords import xyz_to_face_uv
@@ -302,29 +303,26 @@ def shape_index_lookup(
             xyz_from_triplet,
         )
 
-        for pdf in it:
-            if not len(pdf):
-                yield pd.DataFrame(
-                    {c: pd.Series(dtype="int64")
-                     for c in ("pid", "face", "i30", "j30")}
-                )
-                continue
-            k = pdf["_k"].to_numpy(np.int64)
-            x, y, z = xyz_from_triplet(*int_triplet_from_key(k))
-            face, u, v = xyz_to_face_uv(x, y, z)
-            yield pd.DataFrame(
-                {
-                    "pid": pdf["pid"].to_numpy(np.int64),
-                    "face": face.astype(np.int64),
-                    "i30": _st_to_ij(_uv_to_st(u)),
-                    "j30": _st_to_ij(_uv_to_st(v)),
-                }
-            )
+        k = pdf["_k"].to_numpy(np.int64)
+        x, y, z = xyz_from_triplet(*int_triplet_from_key(k))
+        face, u, v = xyz_to_face_uv(x, y, z)
+        return pd.DataFrame(
+            {
+                "pid": pdf["pid"].to_numpy(np.int64),
+                "face": face.astype(np.int64),
+                "i30": _st_to_ij(_uv_to_st(u)),
+                "j30": _st_to_ij(_uv_to_st(v)),
+            }
+        )
 
-    pts = points.select(
-        F.expr(id_expr).cast("long").alias("pid"),
-        F.expr(key_expr).cast("long").alias("_k"),
-    ).mapInPandas(batches, "pid long, face long, i30 long, j30 long")
+    pts = map_batches(
+        points.select(
+            F.expr(id_expr).cast("long").alias("pid"),
+            F.expr(key_expr).cast("long").alias("_k"),
+        ),
+        to_face_ij,
+        "pid long, face long, i30 long, j30 long",
+    )
     ancs = F.array(
         *[
             F.struct(

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import map_batches
 from .dedup import words_col
 
 STOPWORDS = ("the", "a", "of", "and")
@@ -1175,16 +1176,10 @@ def domain_cap_enforce(
     coin = md5_h64(F.concat(F.lit(salt + ":"), F.col("doc_id").cast("string")))
     base = docs.select("doc_id", "source", coin.alias("coin"))
 
-    def precap(batches):
-        for pdf in batches:
-            if len(pdf):
-                yield (
-                    pdf.sort_values(["coin", "doc_id"])
-                    .groupby("source", sort=False)
-                    .head(cap)
-                )
+    def precap(pdf):
+        return pdf.sort_values(["coin", "doc_id"]).groupby("source", sort=False).head(cap)
 
-    surv = base.mapInPandas(precap, schema="doc_id long, source string, coin long")
+    surv = map_batches(base, precap, "doc_id long, source string, coin long")
     from pyspark.sql import Window
 
     win = Window.partitionBy("source").orderBy(

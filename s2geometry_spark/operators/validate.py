@@ -31,6 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import map_batches
 from ..kernels import predicates
 
 __all__ = [
@@ -56,41 +57,40 @@ def loop_validation(
 
     arrs = chains_as_arrays(chains, chain_col)
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for cid, cell in zip(pdf[chain_col], pdf["verts"]):
-                V = _verts_to_np(cell)
-                n = len(V)
-                if n < 3:
-                    rows.append((cid, n, 1, -1, -1))
-                    continue
-                W = np.roll(V, -1, axis=0)  # W[i] = V[(i+1) % n]
-                dup = _first_true(np.all(V == W, axis=1))
-                if dup >= 0:
-                    rows.append((cid, n, 2, dup, (dup + 1) % n))
-                    continue
-                anti = _first_true(np.all(V == -W, axis=1))
-                if anti >= 0:
-                    rows.append((cid, n, 3, anti, (anti + 1) % n))
-                    continue
-                ii, jj = np.triu_indices(n, k=2)
-                keep = ~((ii == 0) & (jj == n - 1))
-                ii, jj = ii[keep], jj[keep]
-                cross = predicates.edges_cross_batch(
-                    V[ii], W[ii], V[jj], W[jj], robust=False
-                )
-                k = _first_true(cross)  # i-major order = min (i, j)
-                if k >= 0:
-                    rows.append((cid, n, 4, int(ii[k]), int(jj[k])))
-                else:
-                    rows.append((cid, n, 0, -1, -1))
-            yield pd.DataFrame(
-                rows,
-                columns=["loop_id", "n_vertices", "error_code", "idx_a", "idx_b"],
+    def validate(pdf):
+        rows = []
+        for cid, cell in zip(pdf[chain_col], pdf["verts"]):
+            V = _verts_to_np(cell)
+            n = len(V)
+            if n < 3:
+                rows.append((cid, n, 1, -1, -1))
+                continue
+            W = np.roll(V, -1, axis=0)  # W[i] = V[(i+1) % n]
+            dup = _first_true(np.all(V == W, axis=1))
+            if dup >= 0:
+                rows.append((cid, n, 2, dup, (dup + 1) % n))
+                continue
+            anti = _first_true(np.all(V == -W, axis=1))
+            if anti >= 0:
+                rows.append((cid, n, 3, anti, (anti + 1) % n))
+                continue
+            ii, jj = np.triu_indices(n, k=2)
+            keep = ~((ii == 0) & (jj == n - 1))
+            ii, jj = ii[keep], jj[keep]
+            cross = predicates.edges_cross_batch(
+                V[ii], W[ii], V[jj], W[jj], robust=False
             )
+            k = _first_true(cross)  # i-major order = min (i, j)
+            if k >= 0:
+                rows.append((cid, n, 4, int(ii[k]), int(jj[k])))
+            else:
+                rows.append((cid, n, 0, -1, -1))
+        return pd.DataFrame(
+            rows,
+            columns=["loop_id", "n_vertices", "error_code", "idx_a", "idx_b"],
+        )
 
-    return arrs.mapInPandas(batches, _SCHEMA)
+    return map_batches(arrs, validate, _SCHEMA)
 
 
 def _star_sector_key(u: np.ndarray, v: np.ndarray):
@@ -139,44 +139,45 @@ def star_order_chains(
 
     arrs = chains_as_arrays(chains, chain_col)
 
-    def batches(it):
-        for pdf in it:
-            out_cid, out_seq, out_x, out_y, out_z = [], [], [], [], []
-            for cid, cell in zip(pdf[chain_col], pdf["verts"]):
-                V = _verts_to_np(cell)
-                n = len(V)
-                mn, mx = V.min(axis=0), V.max(axis=0)
-                m0, m1, m2 = (
-                    (mn[0] + mx[0]) * 0.5,
-                    (mn[1] + mx[1]) * 0.5,
-                    (mn[2] + mx[2]) * 0.5,
-                )
-                cn = np.sqrt((m0 * m0 + m1 * m1) + m2 * m2)
-                c0, c1, c2 = m0 / cn, m1 / cn, m2 / cn
-                h = np.sqrt(c0 * c0 + c1 * c1)
-                e1x, e1y = -c1 / h, c0 / h  # e1z = 0 by construction
-                e2x, e2y, e2z = -c2 * e1y, c2 * e1x, c0 * e1y - c1 * e1x
-                u = V[:, 0] * e1x + V[:, 1] * e1y
-                v = (V[:, 0] * e2x + V[:, 1] * e2y) + V[:, 2] * e2z
-                q, r = _star_sector_key(u, v)
-                order = np.lexsort((np.arange(n), r, q))
-                out_cid.extend([cid] * n)
-                out_seq.extend(range(n))
-                out_x.extend(V[order, 0])
-                out_y.extend(V[order, 1])
-                out_z.extend(V[order, 2])
-            yield pd.DataFrame(
-                {
-                    chain_col: out_cid,
-                    "seq": out_seq,
-                    "x": out_x,
-                    "y": out_y,
-                    "z": out_z,
-                }
+    def star_order(pdf):
+        out_cid, out_seq, out_x, out_y, out_z = [], [], [], [], []
+        for cid, cell in zip(pdf[chain_col], pdf["verts"]):
+            V = _verts_to_np(cell)
+            n = len(V)
+            mn, mx = V.min(axis=0), V.max(axis=0)
+            m0, m1, m2 = (
+                (mn[0] + mx[0]) * 0.5,
+                (mn[1] + mx[1]) * 0.5,
+                (mn[2] + mx[2]) * 0.5,
             )
+            cn = np.sqrt((m0 * m0 + m1 * m1) + m2 * m2)
+            c0, c1, c2 = m0 / cn, m1 / cn, m2 / cn
+            h = np.sqrt(c0 * c0 + c1 * c1)
+            e1x, e1y = -c1 / h, c0 / h  # e1z = 0 by construction
+            e2x, e2y, e2z = -c2 * e1y, c2 * e1x, c0 * e1y - c1 * e1x
+            u = V[:, 0] * e1x + V[:, 1] * e1y
+            v = (V[:, 0] * e2x + V[:, 1] * e2y) + V[:, 2] * e2z
+            q, r = _star_sector_key(u, v)
+            order = np.lexsort((np.arange(n), r, q))
+            out_cid.extend([cid] * n)
+            out_seq.extend(range(n))
+            out_x.extend(V[order, 0])
+            out_y.extend(V[order, 1])
+            out_z.extend(V[order, 2])
+        return pd.DataFrame(
+            {
+                chain_col: out_cid,
+                "seq": out_seq,
+                "x": out_x,
+                "y": out_y,
+                "z": out_z,
+            }
+        )
 
-    return arrs.mapInPandas(
-        batches, f"{chain_col} long, seq long, x double, y double, z double"
+    return map_batches(
+        arrs,
+        star_order,
+        f"{chain_col} long, seq long, x double, y double, z double",
     )
 
 
@@ -341,29 +342,30 @@ def loop_pair_approx_match(
     )
     joined = arrs_a.join(arrs_b, chain_col)
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for cid, va, vb in zip(pdf[chain_col], pdf["verts"], pdf["verts_b"]):
-                A = _verts_to_np(va)
-                B = _verts_to_np(vb)
-                n = len(A)
-                matched = -1
-                if n == len(B):
-                    for off in range(n):
-                        R = np.roll(A, -off, axis=0)
-                        dx, dy, dz = (R - B).T
-                        d = (dx * dx + dy * dy) + dz * dz
-                        if (d <= ch2_tol).all():
-                            matched = off
-                            break
-                rows.append((cid, n, matched))
-            yield pd.DataFrame(
-                rows, columns=[chain_col, "n_vertices", "matched_offset"]
-            )
+    def match_offset(pdf):
+        rows = []
+        for cid, va, vb in zip(pdf[chain_col], pdf["verts"], pdf["verts_b"]):
+            A = _verts_to_np(va)
+            B = _verts_to_np(vb)
+            n = len(A)
+            matched = -1
+            if n == len(B):
+                for off in range(n):
+                    R = np.roll(A, -off, axis=0)
+                    dx, dy, dz = (R - B).T
+                    d = (dx * dx + dy * dy) + dz * dz
+                    if (d <= ch2_tol).all():
+                        matched = off
+                        break
+            rows.append((cid, n, matched))
+        return pd.DataFrame(
+            rows, columns=[chain_col, "n_vertices", "matched_offset"]
+        )
 
-    return joined.mapInPandas(
-        batches, f"{chain_col} long, n_vertices long, matched_offset long"
+    return map_batches(
+        joined,
+        match_offset,
+        f"{chain_col} long, n_vertices long, matched_offset long",
     )
 
 

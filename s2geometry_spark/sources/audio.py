@@ -12,8 +12,6 @@ decoded samples must equal the regenerated source bit-for-bit.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -26,6 +24,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..functions import map_batches
 from ..kernels import wavcodec
 from ..kernels.geotag import splitmix64
 from .images import n_images_for_sf_dir
@@ -72,13 +71,12 @@ def audio_df(
         8, spark.sparkContext.defaultParallelism
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [make_audio_row(int(i)) for i in pdf["id"]]
-            yield pd.DataFrame(rows, columns=AUDIO_SCHEMA.fieldNames())
+    def gen(pdf):
+        rows = [make_audio_row(int(i)) for i in pdf["id"]]
+        return pd.DataFrame(rows, columns=AUDIO_SCHEMA.fieldNames())
 
     rng = spark.range(0, n, numPartitions=min(num_partitions, max(1, n)))
-    return rng.mapInPandas(gen, AUDIO_SCHEMA)
+    return map_batches(rng, gen, AUDIO_SCHEMA)
 
 
 # ---------- near-dup fixture (planted variants) ----------
@@ -137,14 +135,13 @@ def audio_dedup_df(
         8, spark.sparkContext.defaultParallelism
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                r
-                for i in pdf["id"]
-                for r in make_audio_dedup_rows(int(i))
-            ]
-            yield pd.DataFrame(rows, columns=DEDUP_SCHEMA.fieldNames())
+    def gen(pdf):
+        rows = [
+            r
+            for i in pdf["id"]
+            for r in make_audio_dedup_rows(int(i))
+        ]
+        return pd.DataFrame(rows, columns=DEDUP_SCHEMA.fieldNames())
 
     rng = spark.range(0, n, numPartitions=min(num_partitions, max(1, n)))
-    return rng.mapInPandas(gen, DEDUP_SCHEMA)
+    return map_batches(rng, gen, DEDUP_SCHEMA)

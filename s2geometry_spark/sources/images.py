@@ -19,8 +19,6 @@ Row derivation (all from splitmix64 of the index):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -33,6 +31,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..functions import map_batches
 from ..kernels import imagecodec
 from ..kernels.geotag import splitmix64
 
@@ -86,15 +85,6 @@ def make_row(idx: int, px_scale: int = 1) -> dict:
     }
 
 
-def _gen_batches(px_scale: int):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [make_row(int(i), px_scale) for i in pdf["id"]]
-            yield pd.DataFrame(rows, columns=IMAGES_SCHEMA.fieldNames())
-
-    return gen
-
-
 def images_df(
     spark: SparkSession,
     n: int,
@@ -102,8 +92,13 @@ def images_df(
     px_scale: int = 1,
 ) -> DataFrame:
     num_partitions = num_partitions or max(8, spark.sparkContext.defaultParallelism)
+
+    def gen(pdf):
+        rows = [make_row(int(i), px_scale) for i in pdf["id"]]
+        return pd.DataFrame(rows, columns=IMAGES_SCHEMA.fieldNames())
+
     rng = spark.range(0, n, numPartitions=min(num_partitions, max(1, n)))
-    return rng.mapInPandas(_gen_batches(px_scale), IMAGES_SCHEMA)
+    return map_batches(rng, gen, IMAGES_SCHEMA)
 
 
 def n_images_for_sf_dir(sf_dir: str) -> int:
@@ -174,10 +169,9 @@ def n_videos_for_sf_dir(sf_dir: str) -> int:
 def videos_df(spark: SparkSession, n: int, num_partitions: int | None = None) -> DataFrame:
     num_partitions = num_partitions or max(8, spark.sparkContext.defaultParallelism)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [make_video_row(int(i)) for i in pdf["id"]]
-            yield pd.DataFrame(rows, columns=VIDEOS_SCHEMA.fieldNames())
+    def gen(pdf):
+        rows = [make_video_row(int(i)) for i in pdf["id"]]
+        return pd.DataFrame(rows, columns=VIDEOS_SCHEMA.fieldNames())
 
     rng = spark.range(0, n, numPartitions=min(num_partitions, max(1, n)))
-    return rng.mapInPandas(gen, VIDEOS_SCHEMA)
+    return map_batches(rng, gen, VIDEOS_SCHEMA)

@@ -9,12 +9,22 @@ SF_TEST = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 
 
+def pytest_collection_modifyitems(items):
+    """Run the tests that need no Spark session before those that do
+    (stable, so each group keeps file order).  The Spark-backed tests
+    take most of the suite's time on a small machine; going first keeps
+    the quick Spark-free results independent of how far a time-limited
+    run gets."""
+    items.sort(key=lambda item: "spark" in getattr(item, "fixturenames", ()))
+
+
 @pytest.fixture(scope="session")
 def spark():
     from s2geometry_spark.sources.session import get_spark
 
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
-    spark = get_spark("s2spark-tests", cpus=8, shuffle_partitions=8)
+    # cores from SPARK_GRAFT_CPUS (or the machine); a fixed shuffle width
+    # keeps plans the same on every box
+    spark = get_spark("s2spark-tests", shuffle_partitions=8)
     yield spark
     spark.stop()
 
@@ -43,12 +53,13 @@ def duck():
 
 
 def compare_frames(spark_df, duck_rel, sort_cols=None):
-    """Order-insensitive compare of a Spark DataFrame and a DuckDB relation,
-    mirroring the driver's row-count + schema + value-hash check."""
+    """Order-insensitive compare of a Spark DataFrame and a DuckDB relation
+    (or its result frame), mirroring the driver's row-count + schema +
+    value-hash check."""
     import pandas as pd
 
     pdf_s = spark_df.toPandas()
-    pdf_d = duck_rel.df()
+    pdf_d = duck_rel if isinstance(duck_rel, pd.DataFrame) else duck_rel.df()
     assert sorted(pdf_s.columns) == sorted(pdf_d.columns), (
         f"columns differ: {sorted(pdf_s.columns)} vs {sorted(pdf_d.columns)}"
     )

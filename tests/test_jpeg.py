@@ -260,3 +260,24 @@ def test_truncated_entropy_stream_raises_valueerror_not_indexerror():
                 data_start + (len(buf) - data_start) // 2):
         with pytest.raises(ValueError):
             decode_jpeg(buf[:cut] + b"\xff\xd9")
+
+
+def test_corrupted_streams_raise_only_valueerror():
+    """Seeded fuzz: truncations and 1-3 random byte flips of one real
+    JPEG.  Each either decodes or raises ValueError — never an
+    IndexError, struct.error or KeyError from inside the parser."""
+    buf = encode_jpeg(gen_pixels(7, 40, 24), 98)
+    rng = np.random.default_rng(20261018)
+    rejected = 0
+    for _ in range(3000):
+        b = bytearray(buf)
+        if rng.random() < 0.5:
+            b = b[: int(rng.integers(0, len(b)))]
+        else:
+            for _ in range(int(rng.integers(1, 4))):
+                b[int(rng.integers(0, len(b)))] ^= int(rng.integers(1, 256))
+        try:
+            decode_jpeg(bytes(b))
+        except ValueError:
+            rejected += 1
+    assert rejected > 2000  # most corruptions are caught, not decoded

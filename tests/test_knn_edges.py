@@ -185,53 +185,23 @@ def test_project_to_closest_edges(spark, edge_tables):
         assert (r.px, r.py, r.pz) == (P[0], P[1], P[2])
 
 
-def test_empty_arrow_batch_emits_full_schema():
-    """Regression (r3 ADVICE): a zero-row Arrow batch must still yield a
-    frame with every declared schema column — including each g_<level>
-    group key — or Spark's Arrow serializer crashes on the column-count
-    mismatch.  Drives both mapInPandas generators directly."""
-    import pandas as pd
-
-    from s2geometry_spark.operators.knn_edges import (
-        E_COLS,
-        _edge_cover_batches,
-        _edge_cover_schema,
-        _point_keys_flat,
-    )
-
-    stage_levels = [4, 6]
-    declared = [
-        f.split()[0] for f in _edge_cover_schema(stage_levels).split(", ")
-    ]
-    empty_in = pd.DataFrame({c: pd.Series(dtype="float64") for c in E_COLS})
-    empty_in.insert(0, "eid", pd.Series(dtype="int64"))
-    outs = list(_edge_cover_batches(stage_levels)(iter([empty_in])))
-    assert len(outs) == 1
-    assert list(outs[0].columns) == declared
-    assert len(outs[0]) == 0
-
-    # non-empty path produces the same column set (order-insensitive:
-    # Spark's Arrow writer matches by name)
-    one = pd.DataFrame(
-        {
-            "eid": [1],
-            "e0x": [1.0], "e0y": [0.0], "e0z": [0.0],
-            "e1x": [0.0], "e1y": [1.0], "e1z": [0.0],
-        }
-    )
-    outs2 = list(_edge_cover_batches(stage_levels)(iter([one])))
-    assert sorted(outs2[0].columns) == sorted(declared)
-
-    # point-key generator: empty batch keeps qid/qx/qy/qz/q_cell + key + g
-    q_empty = pd.DataFrame(
-        {
-            "qid": pd.Series(dtype="int64"),
-            "qx": pd.Series(dtype="float64"),
-            "qy": pd.Series(dtype="float64"),
-            "qz": pd.Series(dtype="float64"),
-            "q_cell": pd.Series(dtype="int64"),
-        }
-    )
-    pouts = list(_point_keys_flat(6, 4, 2)(iter([q_empty])))
-    assert len(pouts) == 1
-    assert list(pouts[0].columns) == ["qid", "qx", "qy", "qz", "q_cell", "key", "g"]
+def test_empty_partitions_match_bruteforce(spark, edge_tables):
+    """Range-partitioned then filtered inputs leave most partitions empty
+    on both sides; every per-batch kernel and cogroup of the staged join
+    must run through them and still equal the brute-force answer."""
+    edges, queries = edge_tables
+    edges = edges.repartitionByRange(16, "eid").where(F.col("eid") < 60)
+    queries = queries.repartitionByRange(8, "qid").where(F.col("qid") < 20)
+    k = 2
+    got = {
+        (r.qid, r.rank): (r.eid, r.dist_chord2)
+        for r in closest_edges_join(
+            spark, edges, queries, k, start_level=6, num_stages=2
+        ).collect()
+    }
+    want = {
+        (r.qid, r.rank): (r.eid, r.dist_chord2)
+        for r in _brute(spark, edges, queries, k).collect()
+    }
+    assert len(want) == 20 * k
+    assert got == want

@@ -133,7 +133,59 @@ def test_checkpoint_attempt_lineage(spark, images_geo, tmp_path):
     assert run3.pending_buckets() == []
 
 
-def test_curation_pipeline_job_funnel_and_resume(spark, tmp_path):
+def test_checkpoint_resume_after_torn_manifest(spark, tmp_path):
+    """Kill at any byte of the last manifest append: truncate the
+    manifest at every offset of its last line, with that bucket's data
+    directory left behind.  Resume never raises, re-runs exactly the
+    torn bucket (as attempt 2) unless its record is complete, and the
+    merged result equals a single-pass run."""
+    import json
+    import os
+    import shutil
+
+    import pyarrow.dataset as pads
+
+    from s2geometry_spark.operators.checkpoint import MANIFEST, CheckpointedRun
+
+    src = spark.range(0, 240, numPartitions=4).selectExpr("id", "id * 7 % 13 AS v")
+    single = sorted(tuple(r) for r in src.collect())
+
+    def make_unit(run):
+        return lambda spark_, b: run.bucket_filter(src, "id", b)
+
+    base = str(tmp_path / "base")
+    done = CheckpointedRun(base, n_buckets=4)
+    done.run(spark, make_unit(done))
+    with open(os.path.join(base, MANIFEST), "rb") as f:
+        manifest = f.read()
+    nl = manifest.rindex(b"\n", 0, len(manifest) - 1) + 1
+    head, last = manifest[:nl], manifest[nl:]
+    torn_bucket = json.loads(last)["bucket"]
+    # row counts come from the Parquet footers
+    assert sum(r["rows"] for r in done.lineage()) == len(single)
+
+    work = str(tmp_path / "work")
+    for cut in range(len(last) + 1):
+        shutil.rmtree(work, ignore_errors=True)
+        shutil.copytree(base, work)
+        with open(os.path.join(work, MANIFEST), "wb") as f:
+            f.write(head + last[:cut])
+        run = CheckpointedRun(work, n_buckets=4)
+        rec = run.run(spark, make_unit(run))
+        committed = cut >= len(last) - 1  # only the newline is missing
+        if committed:
+            assert rec == []
+        else:
+            assert [(r["bucket"], r["attempt"]) for r in rec] == [(torn_bucket, 2)]
+        assert run.pending_buckets() == []
+        assert sorted(r["bucket"] for r in run.lineage()) == [0, 1, 2, 3]
+        merged = pads.dataset(os.path.join(work, "data"), format="parquet").to_table()
+        got = sorted(zip(merged["id"].to_pylist(), merged["v"].to_pylist()))
+        assert got == single, cut
+    assert sorted(tuple(r) for r in run.result(spark).select("id", "v").collect()) == single
+
+
+def test_curation_pipeline_job_funnel_and_resume(tmp_path):
     """End-to-end curation DAG (jobs/curation_pipeline_job.py): funnel is
     monotone, packing covers exactly the surviving train docs, and a
     re-run with the same --out skips every stage."""

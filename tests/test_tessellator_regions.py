@@ -79,7 +79,7 @@ def test_region_union_intersection_predicates():
     ).all()
 
 
-def test_composites_work_with_coverer_and_index(spark):
+def test_composites_work_with_coverer_and_index():
     from s2geometry_spark.kernels.coverer import CovererOptions, RegionCoverer
     from s2geometry_spark.operators.contains_join import RegionIndex
 
