@@ -1,6 +1,7 @@
 #!/usr/bin/env python
 """Benchmark harness — runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
+(default /root/testdata/sf0.1) on get_spark()'s local[N] (N from
+$SPARK_GRAFT_CPUS, else the usable cores) and prints ONE
 JSON line: {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}.
 
 Each query is materialized with a count() (forces the full plan, no driver
@@ -23,7 +24,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 WARMUP_DIR = "/root/testdata/sf0.001"
 
 
@@ -32,8 +32,8 @@ def _sf_from_dir(d: str) -> float:
     return float(m.group(1)) if m else -1.0
 
 
-def _run_all(cpus: int, sf_dir: str, warmup: bool = True):
-    """Returns (per-query seconds dict, total input rows touched)."""
+def _run_all(sf_dir: str, warmup: bool = True):
+    """Returns (per-query seconds dict, total input rows touched, cores)."""
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entry
@@ -42,7 +42,8 @@ def _run_all(cpus: int, sf_dir: str, warmup: bool = True):
     active = SparkSession.getActiveSession()
     if active is not None:
         active.stop()
-    spark = get_spark(app_name=f"bench-local[{cpus}]", cpus=cpus)
+    spark = get_spark(app_name="bench")
+    cpus = spark.sparkContext.defaultParallelism
     qs = entry.queries()
     if warmup:
         for fn in qs.values():
@@ -58,7 +59,7 @@ def _run_all(cpus: int, sf_dir: str, warmup: bool = True):
     # rows processed: the point tables feeding the headline queries
     n_orders = spark.read.parquet(f"{sf_dir}/orders.parquet").count()
     spark.stop()
-    return timings, n_orders
+    return timings, n_orders, cpus
 
 
 def main() -> None:
@@ -90,11 +91,11 @@ def main() -> None:
             }
         )
     else:
-        timings, rows = _run_all(CPUS, SF_DIR)
+        timings, rows, cpus = _run_all(SF_DIR)
         total = sum(timings.values())
         out.update(
             {
-                "metric": f"headline suite wall time on local[{CPUS}]",
+                "metric": f"headline suite wall time on local[{cpus}]",
                 "value": round(total, 3),
                 "queries": timings,
                 "rows_per_sec": round(rows * len(timings) / total, 1) if total else 0.0,

@@ -19,8 +19,6 @@ Two dataflow shapes:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -145,20 +143,23 @@ def winding_region_cases(
         built.append((fixture, norm, ref01))
     x, y, z = xyz
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:  # one frame per fixture: stays a generator
-            P = pdf[[x, y, z]].to_numpy(np.float64)
-            pids = pdf[point_id].to_numpy()
-            for fixture, norm, ref01 in built:
-                w = winding_numbers(norm, ref, ref01, P)
-                yield pd.DataFrame(
+    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        P = pdf[[x, y, z]].to_numpy(np.float64)
+        pids = pdf[point_id].to_numpy()
+        return pd.concat(
+            [
+                pd.DataFrame(
                     {
                         "fixture": fixture,
                         point_id: pids,
-                        "inside": (w % 2) != 0,
+                        "inside": (winding_numbers(norm, ref, ref01, P) % 2) != 0,
                     }
                 )
+                for fixture, norm, ref01 in built
+            ],
+            ignore_index=True,
+        )
 
-    return points.select(point_id, x, y, z).mapInPandas(
-        batches, f"fixture string, {point_id} long, inside boolean"
+    return map_batches(
+        points.select(point_id, x, y, z), fn, f"fixture string, {point_id} long, inside boolean"
     )
